@@ -35,7 +35,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Scale notes: the log holds file paths + stats only (O(files), like an
   * Iceberg manifest list); data moves through ordinary distributed
   * `df.write.parquet`, so a 1000-executor cluster writes in parallel and
-  * only the O(KB) pointer swap is centralized. Per-file row counts,
+  * only the O(KB) pointer swap is centralized. The one exception is a
+  * driver-resident frame (its rows already sit in a `LocalRelation` on
+  * the driver, e.g. a small ingest batch): it is written on the driver as
+  * ONE file, with no Spark job, when the table is unpartitioned and
+  * unsorted. Per-file row counts,
   * byte sizes, and min/max column stats are harvested from the parquet
   * FOOTERS of the just-written files (a distributed metadata-only pass —
   * never a second scan of the data), so every commit is single-pass over
@@ -431,7 +435,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       if (keyCols.forall(d.keyCols.contains))
         // the equality-delete file CARRIES the key tuples (typed at stage
         // time) — read them directly, no matching pass at all
-        parts += spark.read.parquet(d.path).select(keyCols.map(col): _*)
+        parts += eqDeleteRows(d).select(keyCols.map(col): _*)
       else {
         // delete keyed on other columns: match key-only against the
         // scoped remainder (no addedAt scoping — superset is fine here)
@@ -598,12 +602,18 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       : (DataFrame, org.apache.spark.sql.Column) = {
     import org.apache.spark.sql.functions.broadcast
     val entryCols = d.keyCols.map(k => s"__gd_eq_$k")
-    val e0 = spark.read.parquet(d.path).toDF(entryCols: _*)
+    val e0 = eqDeleteRows(d).toDF(entryCols: _*)
     val e = if (d.bytes >= 0 && d.bytes <= (32L << 20)) broadcast(e0) else e0
     val keyMatch = d.keyCols.zip(entryCols)
       .map { case (k, ek) => df(k) <=> e(ek) }.reduce(_ && _)
     (e, keyMatch)
   }
+
+  /** The key tuples of one equality-delete file, read under the schema
+    * its footer declares: `spark.read.parquet` without a schema would run
+    * a Spark job just to infer it. */
+  private def eqDeleteRows(d: SnapshotTable.EqDeleteFile): DataFrame =
+    spark.read.schema(SnapshotTable.footerSchema(spark, d.path)).parquet(d.path)
 
   /** [[eqKeyJoin]] plus the per-row sequence scope (`__gd_added <
     * atVersion`) — the CDC resolution spelling, where rows of mixed
@@ -1831,7 +1841,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val ranges: Seq[(SnapshotTable.EqDeleteFile,
         Option[org.apache.spark.sql.sources.Filter])] =
       eqDels.map { d =>
-        val e = spark.read.parquet(d.path)
+        val e = eqDeleteRows(d)
         val aggs = d.keyCols.flatMap(k => Seq(
           smin(col(k)), smax(col(k)),
           smax(isnull(col(k)).cast("int"))))
@@ -2128,8 +2138,23 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     // INT64 micros timestamps: footer stats are usable (INT96 has none)
     // and the files stay readable by other engines
     spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+    // rows the driver already holds (see [[SnapshotTable.driverRows]])
+    // become ONE file written right here: no Spark job, and no split into
+    // defaultParallelism slivers. Only unsorted, unpartitioned writes have
+    // no layout to arrange, so only they take this path.
+    val local =
+      if (pcols.isEmpty && sortCols.isEmpty) SnapshotTable.driverRows(df)
+      else None
     val paths: Seq[String] =
-      if (pcols.isEmpty) {
+      if (local.isDefined) {
+        // a fresh dir reachable only through this commit: a crash before
+        // the commit leaves an orphan that removeOrphans sweeps
+        val uuid = java.util.UUID.randomUUID.toString
+        val dir = Files.createDirectories(dataDir.resolve(uuid))
+        val path = dir.resolve(s"part-00000-$uuid.parquet").toString
+        ParquetOutput(spark, df.schema).writeFile(path, local.get.iterator)
+        Seq(path)
+      } else if (pcols.isEmpty) {
         val dir = dataDir.resolve(java.util.UUID.randomUUID.toString)
         val arranged =
           if (sortCols.isEmpty) df
@@ -2849,6 +2874,43 @@ object SnapshotTable {
     } finally reader.close()
   }
 
+  /** The schema `spark.read.parquet(path)` infers for one file, read from
+    * its footer on the driver. Same conversion as Spark's inference (the
+    * row schema Spark recorded in the footer, else the parquet schema
+    * converted under the session's conf), without inference's Spark job. */
+  private[table] def footerSchema(spark: SparkSession, path: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val file = new org.apache.hadoop.fs.Path(path)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file,
+        spark.sessionState.newHadoopConf()))
+    val footer = try reader.getFooter finally reader.close()
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(file, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The rows of a frame the driver already holds, or None. The test is
+    * exact: the optimized plan is a bare, non-empty `LocalRelation`
+    * (Spark's `ConvertToLocalRelation` has folded projections, filters
+    * and limits into it), whose `LocalTableScanExec` answers
+    * `executeCollect` without a Spark job. Only frames whose analyzed
+    * leaves are all local relations are optimized here, so file-backed
+    * frames skip the extra optimizer pass. */
+  private[table] def driverRows(df: DataFrame)
+      : Option[Array[org.apache.spark.sql.catalyst.InternalRow]] = {
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val qe = df.queryExecution
+    if (!qe.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation]))
+      return None
+    qe.optimizedPlan match {
+      case r: LocalRelation if r.data.nonEmpty && !r.isStreaming =>
+        Some(qe.executedPlan.executeCollect())
+      case _ => None
+    }
+  }
+
   /** Driver-side footer pass for SMALL commits: the footer reads are
     * independent local metadata IO (~5-20 ms each, dominated by the
     * parquet footer open), so a serial loop over a 16-32 file commit
@@ -2868,7 +2930,14 @@ object SnapshotTable {
       val tasks: Seq[java.util.concurrent.Callable[
         (String, (Long, Long, Map[String, ColStats]))]] =
         paths.map(p => (() => p -> footerStats(p, statCols)): java.util.concurrent.Callable[(String, (Long, Long, Map[String, ColStats]))])
-      pool.invokeAll(tasks.asJava).asScala.map(_.get()).toMap
+      // rethrow a footer failure as itself, exactly as the serial path
+      // above does, not wrapped in the pool's ExecutionException
+      pool.invokeAll(tasks.asJava).asScala.map { f =>
+        try f.get() catch {
+          case e: java.util.concurrent.ExecutionException if e.getCause != null =>
+            throw e.getCause
+        }
+      }.toMap
     } finally pool.shutdown()
   }
 

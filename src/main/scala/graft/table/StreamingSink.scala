@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 
 /** Exactly-once Structured Streaming sink into a snapshot table —
   * `df.writeStream.toTable("graft.db.t")`, no foreachBatch glue.
@@ -76,15 +75,9 @@ class GraftStreamingWrite(location: String, schema: StructType,
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      spark.sessionState.newHadoopConf())
-    val factory = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      .prepareWrite(spark, job, Map.empty, schema)
-    val conf = new SerializableConfiguration(job.getConfiguration)
     val staging = java.nio.file.Paths.get(location, "_staging").toString
     new GraftStreamingWrite.EpochWriterFactory(
-      factory, conf, schema, staging, queryId)
+      ParquetOutput(spark, schema), staging, queryId)
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -125,9 +118,7 @@ object GraftStreamingWrite {
 
   /** Executor-side factory: one parquet file per (epoch, partition, task)
     * under the epoch's staging dir. */
-  private class EpochWriterFactory(
-      factory: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
-      conf: SerializableConfiguration, schema: StructType,
+  private class EpochWriterFactory(output: ParquetOutput,
       stagingRoot: String, queryId: String)
       extends StreamingDataWriterFactory {
 
@@ -137,14 +128,8 @@ object GraftStreamingWrite {
       java.nio.file.Files.createDirectories(dir)
       val path = dir.resolve(
         s"part-$partitionId-$taskId-${java.util.UUID.randomUUID}.parquet")
-      val attempt = new org.apache.hadoop.mapreduce.TaskAttemptID(
-        new org.apache.hadoop.mapreduce.TaskID(
-          new org.apache.hadoop.mapreduce.JobID(queryId.take(8), epochId.toInt),
-          org.apache.hadoop.mapreduce.TaskType.MAP, partitionId),
-        (taskId % Int.MaxValue).toInt)
-      val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
-        conf.value, attempt)
-      val out = factory.newInstance(path.toString, schema, ctx)
+      val out = output.open(path.toString, queryId.take(8), epochId.toInt,
+        partitionId, (taskId % Int.MaxValue).toInt)
       new DataWriter[InternalRow] {
         override def write(row: InternalRow): Unit = out.write(row)
         override def commit(): WriterCommitMessage = {
