@@ -213,7 +213,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * (manifest-listed, stats-scoped for position resolution); nothing
     * ever diffs unchanged data. */
   def changes(sinceVersion: Int, toVersion: Int = -1): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     val to = if (toVersion < 0) latestVersion else toVersion
     require(to >= sinceVersion, s"empty version range v$sinceVersion..v$to")
     val toSnap = snapshot(to)
@@ -221,108 +221,46 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     val declared = schema.fieldNames.toSeq
     def tagged(df: DataFrame, typ: String, s: SnapshotTable.Snapshot): DataFrame =
-      df.withColumn("_change_type", lit(typ))
+      df.select(declared.map(col): _*)
+        .withColumn("_change_type", lit(typ))
         .withColumn("_commit_version", lit(s.version))
         .withColumn("_commit_timestamp",
           lit(new java.sql.Timestamp(s.timestampMs)))
-    // rows of `files` at the given (file_path, pos) entries — the
-    // resolution semi-join behind MOR delete / rollback deltas; files
-    // outside every delete file's recorded path range never even plan
-    def resolvePositions(files: Seq[SnapshotTable.DataFile],
-        scopes: Seq[SnapshotTable.DeleteFile], entries: DataFrame): DataFrame = {
-      val scoped = files.filter { f =>
-        val p = SnapshotTable.stripScheme(f.path)
-        scopes.exists(d => d.minPath.isEmpty || d.maxPath.isEmpty ||
-          (SnapshotTable.stripScheme(d.minPath) <= p &&
-            p <= SnapshotTable.stripScheme(d.maxPath)))
-      }
-      val base = readFileList(scoped, schema, toSnap.renames, withRowMeta = true)
-      base.join(broadcast(entries),
-          base(SnapshotTable.MetaFile) === entries("file_path") &&
-            base(SnapshotTable.MetaPos) === entries("pos"), "left_semi")
-        .select(declared.map(col): _*)
-    }
-    // rows of `files` that MATCH any of `matched`'s equality deletes
-    // (null-safe keys, addedAt scoping), evaluated against the given
-    // delete context (the rows must be LIVE under ctx to count exactly
-    // once) — the resolution behind equality-delete / rollback deltas
-    def resolveEqMatches(files: Seq[SnapshotTable.DataFile],
-        dels: Seq[SnapshotTable.DeleteFile],
-        eqCtx: Seq[SnapshotTable.EqDeleteFile],
-        matched: Seq[SnapshotTable.EqDeleteFile]): DataFrame = {
-      val keepMeta = declared ++
-        Seq(SnapshotTable.MetaFile, SnapshotTable.MetaPos)
-      var live = readFileList(files, schema, toSnap.renames, withRowMeta = true)
-      if (dels.nonEmpty) live = applyDeletes(live, dels, keepMeta)
-      if (eqCtx.nonEmpty) live = applyEqDeletes(live, files, eqCtx, keepMeta)
-      eqMatchRows(live, files, matched)
-        .dropDuplicates(SnapshotTable.MetaFile, SnapshotTable.MetaPos)
-        .select(declared.map(col): _*)
-    }
-    // one directory listing for the whole walk (a per-version re-list
-    // would be O(range²) metadata IO and could see mid-call expirations)
-    val vs = versions
-    val range = vs.filter(v => v > sinceVersion && v <= to)
-    val parts: Seq[DataFrame] = range.flatMap { v =>
-      val s = snapshot(v)
-      if (s.operation == "compact" || s.operation == "alter" ||
-        s.operation == "set-partition-spec") Seq.empty
-      else {
-        val prevV = vs.filter(_ < v).lastOption.getOrElse(-1)
-        val p =
-          if (prevV >= 0) snapshot(prevV)
-          else SnapshotTable.Snapshot(-1, 0L, s.schemaJson, Seq.empty, "none")
-        val pPaths = p.files.map(_.path).toSet
-        val sPaths = s.files.map(_.path).toSet
-        val added = s.files.filterNot(f => pPaths(f.path))
-        val removed = p.files.filterNot(f => sPaths(f.path))
-        val survivors = s.files.filter(f => pPaths(f.path))
-        val pDel = p.deleteFiles.map(_.path).toSet
-        val sDel = s.deleteFiles.map(_.path).toSet
-        val newDels = s.deleteFiles.filterNot(d => pDel(d.path))
-        val droppedDels = p.deleteFiles.filterNot(d => sDel(d.path))
-        val out = Seq.newBuilder[DataFrame]
-        if (added.nonEmpty)
-          out += tagged(
-            readWithDeletes(added, schema, toSnap.renames, s.deleteFiles,
-              s.eqDeleteFiles),
-            "insert", s)
-        if (removed.nonEmpty)
-          out += tagged(
-            readWithDeletes(removed, schema, toSnap.renames, p.deleteFiles,
-              p.eqDeleteFiles),
-            "delete", s)
-        if (newDels.nonEmpty && survivors.nonEmpty) {
-          // positions newly deleted on surviving files; EXCEPT against the
-          // prior ledger both dedups in-commit duplicates and guards a
-          // re-recorded entry from double-reporting
-          val fresh = deleteEntries(newDels).except(deleteEntries(p.deleteFiles))
-          out += tagged(resolvePositions(survivors, newDels, fresh), "delete", s)
-        }
-        if (droppedDels.nonEmpty && survivors.nonEmpty) {
-          // rollback resurrection: entries that vanished from the ledger
-          val gone =
-            deleteEntries(droppedDels).except(deleteEntries(s.deleteFiles))
-          out += tagged(resolvePositions(survivors, droppedDels, gone),
-            "insert", s)
-        }
-        // equality-delete deltas: a NEW entry kills the key-matching rows
-        // that were live at the predecessor (evaluated under p's full
-        // delete context so an already-dead row is never reported twice);
-        // a DROPPED entry (rollback) resurrects the key-matching rows
-        // live under s's context
-        val pEq = p.eqDeleteFiles.map(_.path).toSet
-        val sEq = s.eqDeleteFiles.map(_.path).toSet
-        val newEqs = s.eqDeleteFiles.filterNot(d => pEq(d.path))
-        val droppedEqs = p.eqDeleteFiles.filterNot(d => sEq(d.path))
-        if (newEqs.nonEmpty && survivors.nonEmpty)
-          out += tagged(resolveEqMatches(survivors, p.deleteFiles,
-            p.eqDeleteFiles, newEqs), "delete", s)
-        if (droppedEqs.nonEmpty && survivors.nonEmpty)
-          out += tagged(resolveEqMatches(survivors, s.deleteFiles,
-            s.eqDeleteFiles, droppedEqs), "insert", s)
-        out.result()
-      }
+    val parts: Seq[DataFrame] = commitDeltas(sinceVersion, to).flatMap { c =>
+      import c._
+      val out = Seq.newBuilder[DataFrame]
+      if (added.nonEmpty)
+        out += tagged(
+          readWithDeletes(added, schema, toSnap.renames, s.deleteFiles,
+            s.eqDeleteFiles),
+          "insert", s)
+      if (removed.nonEmpty)
+        out += tagged(
+          readWithDeletes(removed, schema, toSnap.renames, p.deleteFiles,
+            p.eqDeleteFiles),
+          "delete", s)
+      // positions newly deleted on surviving files; EXCEPT against the
+      // prior ledger both dedups in-commit duplicates and guards a
+      // re-recorded entry from double-reporting
+      if (newDels.nonEmpty)
+        out ++= positionRows(survivors, schema, toSnap.renames, newDels,
+          deleteEntries(newDels).except(deleteEntries(p.deleteFiles)))
+          .map(tagged(_, "delete", s))
+      // rollback resurrection: entries that vanished from the ledger
+      if (droppedDels.nonEmpty)
+        out ++= positionRows(survivors, schema, toSnap.renames, droppedDels,
+          deleteEntries(droppedDels).except(deleteEntries(s.deleteFiles)))
+          .map(tagged(_, "insert", s))
+      // equality-delete deltas: a NEW entry kills the key-matching rows
+      // that were live at the predecessor (evaluated under p's full
+      // delete ledger so an already-dead row is never reported twice);
+      // a DROPPED entry (rollback) resurrects the key-matching rows live
+      // under s's ledger
+      out ++= eqMatchRows(survivors, schema, toSnap.renames, p, newEqs)
+        .map(tagged(_, "delete", s))
+      out ++= eqMatchRows(survivors, schema, toSnap.renames, s, droppedEqs)
+        .map(tagged(_, "insert", s))
+      out.result()
     }
     if (parts.isEmpty) {
       val cdcSchema = org.apache.spark.sql.types.StructType(schema.fields ++ Seq(
@@ -353,12 +291,13 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * entries, and runs TWO position resolutions per commit — all work
     * whose only purpose is exact change TYPING, which a refresh that
     * recomputes touched groups from current state never consults. This
-    * path batches the whole range into at most three delta-bounded scans:
-    * changed files' keys, one position-entry resolution, and the
-    * equality-delete key files read directly. */
+    * path walks the same per-commit deltas ([[commitDeltas]]) but batches
+    * the whole range into at most three delta-bounded scans: changed
+    * files' keys, one position-entry resolution, and the equality-delete
+    * key files read directly. */
   def changedKeyRows(sinceVersion: Int, toVersion: Int,
       keyCols: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val to = if (toVersion < 0) latestVersion else toVersion
     require(to >= sinceVersion, s"empty version range v$sinceVersion..v$to")
     val toSnap = snapshot(to)
@@ -366,95 +305,126 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
       s"changedKeyRows: unknown key column $k"))
-    val vs = versions
-    val range = vs.filter(v => v > sinceVersion && v <= to)
-    val touchedFiles = collection.mutable.LinkedHashMap[String, SnapshotTable.DataFile]()
-    val seenFiles = collection.mutable.LinkedHashMap[String, SnapshotTable.DataFile]()
-    val posDels = collection.mutable.LinkedHashMap[String, SnapshotTable.DeleteFile]()
-    val eqDels = collection.mutable.LinkedHashMap[String, SnapshotTable.EqDeleteFile]()
-    range.foreach { v =>
-      val s = snapshot(v)
-      if (s.operation != "compact" && s.operation != "alter" &&
-          s.operation != "set-partition-spec") {
-        val prevV = vs.filter(_ < v).lastOption.getOrElse(-1)
-        val p =
-          if (prevV >= 0) snapshot(prevV)
-          else SnapshotTable.Snapshot(-1, 0L, s.schemaJson, Seq.empty, "none")
-        val pPaths = p.files.map(_.path).toSet
-        val sPaths = s.files.map(_.path).toSet
-        (s.files ++ p.files).foreach(f => seenFiles.getOrElseUpdate(f.path, f))
-        // added and removed files: their rows' keys are (a superset of)
-        // the insert/delete/rewrite-carried deltas of this commit
-        s.files.filterNot(f => pPaths(f.path))
-          .foreach(f => touchedFiles.getOrElseUpdate(f.path, f))
-        p.files.filterNot(f => sPaths(f.path))
-          .foreach(f => touchedFiles.getOrElseUpdate(f.path, f))
-        // position-delete ledger delta, BOTH directions (new entries kill
-        // rows, dropped entries resurrect them on rollback) — either way
-        // the referenced rows' keys are touched
-        val pDel = p.deleteFiles.map(_.path).toSet
-        val sDel = s.deleteFiles.map(_.path).toSet
-        (s.deleteFiles.filterNot(d => pDel(d.path)) ++
-          p.deleteFiles.filterNot(d => sDel(d.path)))
-          .foreach(d => posDels.getOrElseUpdate(d.path, d))
-        val pEq = p.eqDeleteFiles.map(_.path).toSet
-        val sEq = s.eqDeleteFiles.map(_.path).toSet
-        (s.eqDeleteFiles.filterNot(d => pEq(d.path)) ++
-          p.eqDeleteFiles.filterNot(d => sEq(d.path)))
-          .foreach(d => eqDels.getOrElseUpdate(d.path, d))
-      }
-    }
+    val deltas = commitDeltas(sinceVersion, to)
+    // added and removed files: their rows' keys are (a superset of) the
+    // insert/delete/rewrite-carried deltas of their commits
+    val touched = deltas.flatMap(c => c.added ++ c.removed).distinctBy(_.path)
+    val touchedPaths = touched.map(_.path).toSet
+    // every other file seen in the range: only rows a ledger delta
+    // references need resolving there
+    val rest = deltas.flatMap(c => c.s.files ++ c.p.files).distinctBy(_.path)
+      .filterNot(f => touchedPaths(f.path))
+    // position-ledger delta, BOTH directions (new entries kill rows,
+    // dropped entries resurrect them on rollback) — either way the
+    // referenced rows' keys are touched; likewise for equality deletes
+    val posDels = deltas.flatMap(c => c.newDels ++ c.droppedDels)
+      .distinctBy(_.path)
+    val eqDels = deltas.flatMap(c => c.newEqs ++ c.droppedEqs)
+      .distinctBy(_.path)
     val parts = Seq.newBuilder[DataFrame]
-    if (touchedFiles.nonEmpty)
-      parts += readFileList(touchedFiles.values.toSeq, schema, toSnap.renames)
-        .select(keyCols.map(col): _*)
-    if (posDels.nonEmpty) {
-      // one batched resolution for every ledger-delta entry in the range:
-      // entries reference rows by (file, pos); files already counted via
-      // touchedFiles contribute all their keys anyway, so only the
-      // path-scoped REMAINDER needs the semi-join
-      val scopes = posDels.values.toSeq
-      val scoped = seenFiles.values.toSeq
-        .filterNot(f => touchedFiles.contains(f.path))
-        .filter { f =>
-          val p = SnapshotTable.stripScheme(f.path)
-          scopes.exists(d => d.minPath.isEmpty || d.maxPath.isEmpty ||
-            (SnapshotTable.stripScheme(d.minPath) <= p &&
-              p <= SnapshotTable.stripScheme(d.maxPath)))
-        }
-      if (scoped.nonEmpty) {
-        val base = readFileList(scoped, schema, toSnap.renames,
-          withRowMeta = true)
-        parts += base.join(broadcast(deleteEntries(scopes)),
-            base(SnapshotTable.MetaFile) === col("file_path") &&
-              base(SnapshotTable.MetaPos) === col("pos"), "left_semi")
-          .select(keyCols.map(col): _*)
-      }
-    }
-    eqDels.values.foreach { d =>
+    if (touched.nonEmpty)
+      parts += readFileList(touched, schema, toSnap.renames)
+    // one batched resolution for every ledger-delta entry in the range
+    if (posDels.nonEmpty)
+      parts ++= positionRows(rest, schema, toSnap.renames, posDels,
+        deleteEntries(posDels))
+    eqDels.foreach { d =>
       if (keyCols.forall(d.keyCols.contains))
         // the equality-delete file CARRIES the key tuples (typed at stage
         // time) — read them directly, no matching pass at all
-        parts += eqDeleteRows(d).select(keyCols.map(col): _*)
-      else {
+        parts += eqDeleteRows(d)
+      else if (rest.nonEmpty) {
         // delete keyed on other columns: match key-only against the
-        // scoped remainder (no addedAt scoping — superset is fine here)
-        val scoped = seenFiles.values.toSeq
-          .filterNot(f => touchedFiles.contains(f.path))
-        if (scoped.nonEmpty) {
-          val base = readFileList(scoped, schema, toSnap.renames)
-          val (e, cond) = eqKeyJoin(base, d)
-          parts += base.join(e, cond, "left_semi")
-            .select(keyCols.map(col): _*)
-        }
+        // remainder (no addedAt scoping — superset is fine here)
+        val base = readFileList(rest, schema, toSnap.renames)
+        val (e, cond) = eqKeyJoin(base, d)
+        parts += base.join(e, cond, "left_semi")
       }
     }
-    parts.result().reduceOption(_.unionByName(_)).getOrElse {
-      val keySchema = org.apache.spark.sql.types.StructType(
-        schema.fields.filter(f => keyCols.contains(f.name)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], keySchema)
+    parts.result().map(_.select(keyCols.map(col): _*))
+      .reduceOption(_.unionByName(_)).getOrElse {
+        val keySchema = org.apache.spark.sql.types.StructType(
+          schema.fields.filter(f => keyCols.contains(f.name)))
+        spark.createDataFrame(
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], keySchema)
+      }
+  }
+
+  /** THE per-commit delta walk behind [[changes]] and [[changedKeyRows]]:
+    * each commit in `(sinceVersion, to]` against its predecessor (an
+    * empty snapshot before v0). Compaction and metadata-only commits
+    * (alter, set-partition-spec) move no rows and are skipped. One
+    * directory listing serves the whole walk (a per-version re-list
+    * would be O(range²) metadata IO and could see mid-call expirations). */
+  private def commitDeltas(sinceVersion: Int,
+      to: Int): Seq[SnapshotTable.CommitDelta] = {
+    val vs = versions
+    vs.zip(-1 +: vs).filter { case (v, _) => v > sinceVersion && v <= to }
+      .flatMap { case (v, prevV) =>
+        val s = snapshot(v)
+        if (s.operation == "compact" || s.operation == "alter" ||
+            s.operation == "set-partition-spec") None
+        else {
+          val p =
+            if (prevV >= 0) snapshot(prevV)
+            else SnapshotTable.Snapshot(-1, 0L, s.schemaJson, Seq.empty, "none")
+          def minus[A](a: Seq[A], b: Seq[A])(path: A => String): Seq[A] = {
+            val gone = b.map(path).toSet
+            a.filterNot(x => gone(path(x)))
+          }
+          val pPaths = p.files.map(_.path).toSet
+          Some(SnapshotTable.CommitDelta(s, p,
+            added = minus(s.files, p.files)(_.path),
+            removed = minus(p.files, s.files)(_.path),
+            survivors = s.files.filter(f => pPaths(f.path)),
+            newDels = minus(s.deleteFiles, p.deleteFiles)(_.path),
+            droppedDels = minus(p.deleteFiles, s.deleteFiles)(_.path),
+            newEqs = minus(s.eqDeleteFiles, p.eqDeleteFiles)(_.path),
+            droppedEqs = minus(p.eqDeleteFiles, s.eqDeleteFiles)(_.path)))
+        }
+      }
+  }
+
+  /** Rows of `files` at the (file_path, pos) `entries`, with provenance
+    * — the resolution semi-join behind MOR delete / rollback deltas.
+    * Files outside every `scopes` delete file's recorded path range never
+    * plan; None when no file is in scope. */
+  private def positionRows(files: Seq[SnapshotTable.DataFile],
+      schema: org.apache.spark.sql.types.StructType,
+      renames: Seq[SnapshotTable.Rename],
+      scopes: Seq[SnapshotTable.DeleteFile],
+      entries: => DataFrame): Option[DataFrame] = {
+    val scoped = files.filter { f =>
+      val p = readerPath(f.path)
+      scopes.exists(d => d.minPath.isEmpty || d.maxPath.isEmpty ||
+        (d.minPath <= p && p <= d.maxPath))
     }
+    if (scoped.isEmpty) None
+    else {
+      val base = readFileList(scoped, schema, renames, withRowMeta = true)
+      val e = entries
+      Some(base.join(org.apache.spark.sql.functions.broadcast(e),
+        base(SnapshotTable.MetaFile) === e("file_path") &&
+          base(SnapshotTable.MetaPos) === e("pos"), "left_semi"))
+    }
+  }
+
+  /** A manifest path in the reader's spelling: the string the parquet
+    * reader reports as `_metadata.file_path`, which is also how every
+    * position-delete entry and its `minPath`/`maxPath` bounds are
+    * spelled. The manifest stores plain paths (`/wh/t 1/data/f.parquet`);
+    * the reader qualifies them against their filesystem, canonicalizes
+    * them as `new Path(path.toString)` (which drops an empty authority:
+    * `file:/`, not `file:///`) and URI-encodes them with Hadoop's
+    * `Path.toUri` (`file:/wh/t%201/data/f.parquet`). Every comparison of
+    * a manifest path with a reader path goes through here — delete-file
+    * scoping and the NDV-sketch key — so both sides are always spelled
+    * alike, whatever the filesystem or the characters in the location. */
+  private def readerPath(p: String): String = {
+    import org.apache.hadoop.fs.Path
+    val path = new Path(p)
+    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    new Path(fs.makeQualified(path).toString).toUri.toString
   }
 
   /** Time travel by version (`VERSION AS OF`). The snapshot's declared
@@ -468,43 +438,48 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     readSnapshotFiles(snap, snap.files, schema)
   }
 
-  /** Read `files` under `snap`'s schema with `snap`'s position deletes
-    * applied — THE merge-on-read read path, shared by every batch surface
+  /** Read `files` under `snap`'s schema with `snap`'s delete ledger
+    * applied (see [[readWithDeletes]]) — shared by every batch surface
     * (readVersion, the DSv2 scan for delete-bearing snapshots, carried-row
-    * reads inside copy-on-write rewrites). Tables without delete files
-    * take the plain file-list read unchanged. */
+    * reads inside copy-on-write rewrites). */
   private[table] def readSnapshotFiles(snap: SnapshotTable.Snapshot,
       files: Seq[SnapshotTable.DataFile],
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     readWithDeletes(files, schema, snap.renames, snap.deleteFiles,
       snap.eqDeleteFiles)
 
+  /** THE live-row reader: `files` under `schema` with a delete ledger
+    * applied — every merge-on-read surface (reads, the position-delete and
+    * merge probes, the changelog) runs through here. Tables without
+    * delete files take the plain file-list read unchanged. `withRowMeta`
+    * keeps each row's provenance ([[SnapshotTable.MetaFile]] /
+    * [[SnapshotTable.MetaPos]]) for callers that record or resolve
+    * positions.
+    *
+    * Equality-delete applicability is a PER-FILE fact (addedAt vs the
+    * delete's commit version, [[SnapshotTable.eqDeleteApplies]]), so the
+    * file list splits into strata of equal applicable-delete signature
+    * and each stratum anti-joins on KEYS ONLY — no per-row sequence
+    * lookup in the plan, and no reader path ever compared with a manifest
+    * path. Signatures are prefix-monotone in addedAt, so there are at
+    * most (eqDels + 1) strata, and compaction folds the ledger anyway. */
   private[table] def readWithDeletes(files: Seq[SnapshotTable.DataFile],
       schema: org.apache.spark.sql.types.StructType,
       renames: Seq[SnapshotTable.Rename],
       dels: Seq[SnapshotTable.DeleteFile],
-      eqDels: Seq[SnapshotTable.EqDeleteFile] = Seq.empty): DataFrame =
-    if (dels.isEmpty && eqDels.isEmpty) readFileList(files, schema, renames)
-    else if (eqDels.isEmpty)
-      applyDeletes(
-        readFileList(files, schema, renames, withRowMeta = true),
-        dels, schema.fieldNames.toSeq)
+      eqDels: Seq[SnapshotTable.EqDeleteFile] = Seq.empty,
+      withRowMeta: Boolean = false): DataFrame =
+    if (dels.isEmpty && eqDels.isEmpty)
+      readFileList(files, schema, renames, withRowMeta)
     else {
-      // Equality-delete applicability is a PER-FILE fact (addedAt vs the
-      // delete's commit version), so split the file list into strata of
-      // equal applicable-delete signature and anti-join each stratum on
-      // KEYS ONLY — no per-row sequence lookup in the plan at all (the
-      // alternative, a broadcast (path → addedAt) join, would ship
-      // O(table files) driver state through every read). Signatures are
-      // prefix-monotone in addedAt, so there are at most (eqDels + 1)
-      // strata, and compaction folds the ledger anyway.
-      val keep = schema.fieldNames.toSeq
+      val keep = schema.fieldNames.toSeq ++
+        (if (withRowMeta) Seq(SnapshotTable.MetaFile, SnapshotTable.MetaPos)
+         else Seq.empty)
       val strata = files.groupBy(f =>
-        eqDels.map(d => f.addedAt < 0 || f.addedAt < d.atVersion)
-          .toIndexedSeq)
+        eqDels.map(SnapshotTable.eqDeleteApplies(_, f)).toIndexedSeq)
       strata.toSeq.sortBy(_._1.mkString).map { case (sig, fs) =>
         var df = readFileList(fs, schema, renames,
-          withRowMeta = dels.nonEmpty)
+          withRowMeta = withRowMeta || dels.nonEmpty)
         if (dels.nonEmpty) df = applyDeletes(df, dels, keep)
         eqDels.zip(sig).collect { case (d, true) => d }
           .foldLeft(df) { (acc, d) =>
@@ -513,10 +488,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
           }
       }.reduceOption(_.unionByName(_))
         // stats pruning can legitimately empty the file list (a point
-        // predicate outside every file's min/max) even while the
-        // eq-delete ledger is live — return the empty relation, the same
-        // contract as the legacy paths' readFileList empty branch
-        .getOrElse(readFileList(Seq.empty, schema, renames))
+        // predicate outside every file's min/max) even while the ledger
+        // is live — return the empty relation, the same contract as
+        // readFileList's empty branch
+        .getOrElse(readFileList(Seq.empty, schema, renames, withRowMeta))
     }
 
   /** Anti-join `base` (which carries the [[SnapshotTable.MetaFile]] /
@@ -540,60 +515,29 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       .select(keep.map(col): _*)
   }
 
-  /** Anti-join `base` (carrying the [[SnapshotTable.MetaFile]] provenance
-    * column) against each equality-delete file's key tuples, scoped by
-    * sequence position: a row is deleted iff its keys null-safe-equal an
-    * entry AND its file was added BEFORE the delete's commit (`addedAt <
-    * atVersion` — the rule that lets one upsert commit delete old rows
-    * while its own new rows survive). The per-row sequence position comes
-    * from a broadcast (path → addedAt) lookup built off the manifest the
-    * caller already holds — O(files) driver state, same as the file list.
-    * Key payloads are broadcast while provably small (manifest byte
-    * counts, no IO); a large backlog degrades to shuffled anti-joins. */
-  private def applyEqDeletes(base: DataFrame,
-      files: Seq[SnapshotTable.DataFile],
-      eqDels: Seq[SnapshotTable.EqDeleteFile], keep: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val withAdded = withAddedAt(base, files)
-    val applied = eqDels.foldLeft(withAdded) { (df, d) =>
-      val (e, cond) = eqJoinSide(df, d)
-      df.join(e, cond, "left_anti")
-    }
-    applied.select(keep.map(col): _*)
-  }
-
-  /** Rows of `base` (declared + provenance columns) matching ANY of the
-    * given equality deletes under the addedAt scoping — the SEMI twin of
-    * [[applyEqDeletes]], used by the changelog to resolve delete/rollback
-    * deltas back to rows. May emit a row once per matching delete file;
-    * callers dedupe on (file, pos). */
-  private def eqMatchRows(base: DataFrame,
-      files: Seq[SnapshotTable.DataFile],
-      eqDels: Seq[SnapshotTable.EqDeleteFile]): DataFrame = {
-    val withAdded = withAddedAt(base, files)
-    eqDels.map { d =>
-      val (e, cond) = eqJoinSide(withAdded, d)
-      withAdded.join(e, cond, "left_semi")
-        .select(base.columns.toIndexedSeq
-          .map(org.apache.spark.sql.functions.col): _*)
-    }.reduce(_.unionAll(_))
-  }
-
-  /** Per-row sequence position: broadcast (path → addedAt) lookup on the
-    * reader's provenance column. The reader's file_path is URI-spelled;
-    * the manifest path is plain — strip the scheme on both sides (same
-    * rule as [[SnapshotTable.stripScheme]]). */
-  private def withAddedAt(base: DataFrame,
-      files: Seq[SnapshotTable.DataFile]): DataFrame = {
-    import org.apache.spark.sql.functions.{broadcast, col, regexp_replace}
-    import spark.implicits._
-    val lookup = broadcast(files.map(f =>
-        (SnapshotTable.stripScheme(f.path), f.addedAt))
-      .toDF("__gd_lk_path", "__gd_added"))
-    base.join(lookup,
-      regexp_replace(base(SnapshotTable.MetaFile),
-        "^[A-Za-z][A-Za-z0-9+.-]*:/+", "/") === col("__gd_lk_path"), "left")
-  }
+  /** Rows of `files` live under `ctx`'s delete ledger that match ANY of
+    * the `matched` equality deletes, with provenance, each row once — the
+    * changelog's resolution of equality-delete / rollback deltas back to
+    * rows. Per delete, the files it applies to come from the manifest
+    * (the same addedAt rule reads use); their live rows are semi-joined
+    * on its keys, and the union is deduplicated on (file, pos). None when
+    * no delete applies to any file. */
+  private def eqMatchRows(files: Seq[SnapshotTable.DataFile],
+      schema: org.apache.spark.sql.types.StructType,
+      renames: Seq[SnapshotTable.Rename],
+      ctx: SnapshotTable.Snapshot,
+      matched: Seq[SnapshotTable.EqDeleteFile]): Option[DataFrame] =
+    matched.flatMap { d =>
+      val applicable = files.filter(SnapshotTable.eqDeleteApplies(d, _))
+      if (applicable.isEmpty) None
+      else {
+        val live = readWithDeletes(applicable, schema, renames,
+          ctx.deleteFiles, ctx.eqDeleteFiles, withRowMeta = true)
+        val (e, cond) = eqKeyJoin(live, d)
+        Some(live.join(e, cond, "left_semi"))
+      }
+    }.reduceOption(_.unionAll(_))
+      .map(_.dropDuplicates(SnapshotTable.MetaFile, SnapshotTable.MetaPos))
 
   /** One equality-delete file as a KEY-ONLY join side: (entries frame
     * with prefixed column names, null-safe key match). The entry payload
@@ -614,16 +558,6 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * a Spark job just to infer it. */
   private def eqDeleteRows(d: SnapshotTable.EqDeleteFile): DataFrame =
     spark.read.schema(SnapshotTable.footerSchema(spark, d.path)).parquet(d.path)
-
-  /** [[eqKeyJoin]] plus the per-row sequence scope (`__gd_added <
-    * atVersion`) — the CDC resolution spelling, where rows of mixed
-    * strata flow through one frame annotated by [[withAddedAt]]. */
-  private def eqJoinSide(df: DataFrame, d: SnapshotTable.EqDeleteFile)
-      : (DataFrame, org.apache.spark.sql.Column) = {
-    import org.apache.spark.sql.functions.lit
-    val (e, keyMatch) = eqKeyJoin(df, d)
-    (e, keyMatch && df("__gd_added") < lit(d.atVersion))
-  }
 
   /** The (file_path, pos) entries of the given delete files. */
   private[table] def deleteEntries(
@@ -1018,22 +952,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       catch { case _: java.io.IOException => p.toAbsolutePath.normalize.toString }
     // live = every file any snapshot references, on main OR on a branch
     // chain (branch commits stage into the same data/ directory)
-    val branchFiles = refs.collect { case (n, ("branch", _)) => n }
-      .flatMap { n =>
-        val b = branch(n)
-        b.versions.flatMap { v =>
-          val s = b.snapshot(v)
-          s.files.map(_.path) ++ s.deleteFiles.map(_.path) ++
-            s.eqDeleteFiles.map(_.path)
-        }
-      }
-    val referenced =
-      (versions.flatMap { v =>
-        val s = snapshot(v)
-        s.files.map(_.path) ++ s.deleteFiles.map(_.path) ++
-          s.eqDeleteFiles.map(_.path)
-      } ++ branchFiles)
-        .map(f => canonical(Paths.get(f))).toSet
+    val referenced = (versions.map(snapshot) ++ branchSnapshots)
+      .flatMap(SnapshotTable.referencedPaths)
+      .map(f => canonical(Paths.get(f))).toSet
     val cutoff = System.currentTimeMillis() - graceMs
     if (!Files.isDirectory(dataDir)) return Seq.empty
     val onDisk = scala.util.Using.resource(Files.walk(dataDir))(
@@ -1350,6 +1271,13 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     node.get("version").asInt
   }
 
+  /** Every snapshot on every branch chain. */
+  private def branchSnapshots: Seq[SnapshotTable.Snapshot] =
+    refs.collect { case (n, ("branch", _)) => n }.toSeq.flatMap { n =>
+      val b = branch(n)
+      b.versions.map(b.snapshot)
+    }
+
   /** All refs: name -> (type `branch`|`tag`, head / pinned version). */
   def refs: Map[String, (String, Int)] = {
     if (!Files.isDirectory(refsDir)) return Map.empty
@@ -1649,7 +1577,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     *
     * Candidate files are manifest-stats pruned by the predicate first
     * (only possibly-matching files are even scanned), and rows already
-    * position-deleted are excluded so an entry is never recorded twice —
+    * deleted (by position or by equality delete, [[readWithDeletes]]) are
+    * excluded so an entry is never recorded twice —
     * readers would tolerate duplicates, but the changelog must see each
     * row deleted exactly once. Concurrent APPENDS rebase cleanly (their
     * rows are untouched by position entries); a concurrent rewrite of a
@@ -1666,17 +1595,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       prunablePredicates(cond, schema))
     if (candidates.isEmpty) return 0L
     val scanned = candidates.map(_.path).toSet
-    val withMeta = readFileList(candidates, schema, base.renames,
-      withRowMeta = true)
-    val keepMeta = schema.fieldNames.toSeq ++
-      Seq(SnapshotTable.MetaFile, SnapshotTable.MetaPos)
-    val posApplied =
-      if (base.deleteFiles.isEmpty) withMeta
-      else applyDeletes(withMeta, base.deleteFiles, keepMeta)
-    val undeleted =
-      if (base.eqDeleteFiles.isEmpty) posApplied
-      else applyEqDeletes(posApplied, candidates, base.eqDeleteFiles, keepMeta)
-    val entries = undeleted
+    val entries = readWithDeletes(candidates, schema, base.renames,
+        base.deleteFiles, base.eqDeleteFiles, withRowMeta = true)
       .filter(coalesce(cond, lit(false))) // SQL DELETE: only TRUE deletes
       .select(col(SnapshotTable.MetaFile).as("file_path"),
         col(SnapshotTable.MetaPos).as("pos"))
@@ -1709,17 +1629,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val base = snapshot(baseV)
     val schema = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val withMeta = readFileList(base.files, schema, base.renames,
-      withRowMeta = true)
-    val keepMeta = schema.fieldNames.toSeq ++
-      Seq(SnapshotTable.MetaFile, SnapshotTable.MetaPos)
-    val posApplied =
-      if (base.deleteFiles.isEmpty) withMeta
-      else applyDeletes(withMeta, base.deleteFiles, keepMeta)
-    val undeleted =
-      if (base.eqDeleteFiles.isEmpty) posApplied
-      else applyEqDeletes(posApplied, base.files, base.eqDeleteFiles, keepMeta)
-    val entries = undeleted
+    val entries = readWithDeletes(base.files, schema, base.renames,
+        base.deleteFiles, base.eqDeleteFiles, withRowMeta = true)
       .join(updates.select(keyCols.map(col): _*), keyCols, "left_semi")
       .select(col(SnapshotTable.MetaFile).as("file_path"),
         col(SnapshotTable.MetaPos).as("pos"))
@@ -1742,9 +1653,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * the DISTINCT key tuples of `keys` as an equality-delete file and
     * commit — the base table is NEVER read or scanned, so a delete-by-key
     * on a 100 TB table costs O(keys), not even the position-delete's
-    * O(matching files) probe scan. Readers apply the entry as a
-    * null-safe anti-join scoped to files added before this commit
-    * ([[applyEqDeletes]]); [[compact]] folds it in.
+    * O(matching files) probe scan. Every merge-on-read surface (reads,
+    * the position-delete and merge probes, the changelog) applies the
+    * entry as a null-safe key anti-join over the stratum of files added
+    * before this commit ([[readWithDeletes]]); [[compact]] folds it in.
     *
     * `keys`' columns name the key (any subset of the table's columns);
     * values are cast to the declared column types so write-side and
@@ -1864,7 +1776,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       }
     val affected = base.files.filter { f =>
       ranges.exists { case (d, filter) =>
-        (f.addedAt < 0 || f.addedAt < d.atVersion) &&
+        SnapshotTable.eqDeleteApplies(d, f) &&
           filter.forall(fl => StatsPruning.prune(Seq(f), Seq(fl)).nonEmpty)
       }
     }
@@ -1924,13 +1836,11 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     keys.select(typed: _*).distinct()
       .coalesce(1).sortWithinPartitions(keyCols.map(col): _*)
       .write.parquet(dir.toString)
-    val paths = scala.util.Using.resource(Files.list(dir))(
-      _.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toSeq).sorted
+    val paths = parquetFilesIn(dir).map(_.toString)
     if (paths.isEmpty) { graft.Tables.deleteRecursively(dir.toString); return Seq.empty }
+    val footer = footerStatsOf(paths, Seq.empty)
     paths.flatMap { p =>
-      val (rows, bytes, _) = SnapshotTable.footerStats(p, Seq.empty)
+      val (rows, bytes, _) = footer(p)
       if (rows == 0) { Files.deleteIfExists(Paths.get(p)); None }
       else Some(SnapshotTable.EqDeleteFile(p, rows, bytes,
         keyCols.map(k => schema.fields.find(_.name.equalsIgnoreCase(k)).get.name)))
@@ -1953,21 +1863,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     // the ranges are a read-side SCOPING optimization, not a correctness
     // requirement, and overlapping ranges only cost a skipped prune.
     entries.sortWithinPartitions("file_path", "pos").write.parquet(dir.toString)
-    val paths = scala.util.Using.resource(Files.list(dir))(
-      _.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(_.toString).toSeq).sorted
+    val paths = parquetFilesIn(dir).map(_.toString)
     if (paths.isEmpty) { graft.Tables.deleteRecursively(dir.toString); return Seq.empty }
-    val statCols = Seq("file_path" -> "string")
-    // same small-commit driver path as manifestEntries: delete ledgers
-    // are typically 1-2 files, not worth a scheduled Spark job
-    val footer =
-      if (paths.size <= 32)
-        SnapshotTable.parFooterStats(paths, statCols)
-      else spark.sparkContext
-        .parallelize(paths, math.max(1, math.min(paths.size, 32)))
-        .map(p => p -> SnapshotTable.footerStats(p, statCols))
-        .collect().toMap
+    val footer = footerStatsOf(paths, Seq("file_path" -> "string"))
     paths.flatMap { p =>
       val (rows, bytes, stats) = footer(p)
       // a file with zero entries contributes nothing — drop it
@@ -2056,26 +1954,13 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val keep = all.filterNot(drop.contains)
     // data files any BRANCH chain references are live too — a branch's
     // commits are invisible to main's version list but its files share
-    // this table's data/ directory
-    val branchLive = allRefs.collect { case (n, ("branch", _)) => n }
-      .flatMap { n =>
-        val b = branch(n)
-        b.versions.flatMap { v =>
-          val s = b.snapshot(v)
-          s.files.map(_.path) ++ s.deleteFiles.map(_.path) ++
-            s.eqDeleteFiles.map(_.path)
-        }
-      }.toSet
-    // delete files (both flavors) are part of a snapshot's content:
-    // collected with the versions that reference them, kept while any
-    // survivor does
-    def allPaths(v: Int): Seq[String] = {
-      val s = snapshot(v)
-      s.files.map(_.path) ++ s.deleteFiles.map(_.path) ++
-        s.eqDeleteFiles.map(_.path)
-    }
-    val live = keep.flatMap(allPaths).toSet ++ branchLive
-    val dead = drop.flatMap(allPaths).toSet -- live
+    // this table's data/ directory. Delete files (both flavors) are part
+    // of a snapshot's content: collected with the versions that reference
+    // them, kept while any survivor does
+    val branchSnaps = branchSnapshots
+    val live = (keep.map(snapshot) ++ branchSnaps)
+      .flatMap(SnapshotTable.referencedPaths).toSet
+    val dead = drop.map(snapshot).flatMap(SnapshotTable.referencedPaths).toSet -- live
     dead.foreach(p => Files.deleteIfExists(Paths.get(p)))
     drop.foreach(v => Files.deleteIfExists(snapDir.resolve(f"v$v%05d.json")))
     // manifest-chunk sweep: chunks referenced by NO surviving snapshot
@@ -2083,9 +1968,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     // versions' chunks, lost-race commit attempts, dropped branches. The
     // grace window protects a concurrent writer's just-published chunks.
     if (Files.isDirectory(manifestsDir)) {
-      val liveRefs = (keep.map(snapshot) ++
-        allRefs.collect { case (n, ("branch", _)) => n }
-          .flatMap { n => val b = branch(n); b.versions.map(b.snapshot) })
+      val liveRefs = (keep.map(snapshot) ++ branchSnaps)
         .flatMap(_.manifestRefs)
         .map(r => Paths.get(r).toAbsolutePath.normalize.toString).toSet
       val cutoffMs = System.currentTimeMillis() - 3600L * 1000
@@ -2169,10 +2052,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
               .sortWithinPartitions(sortCols.map(col): _*)
           }
         arranged.write.parquet(dir.toString)
-        scala.util.Using.resource(Files.list(dir))(
-          _.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".parquet"))
-            .map(_.toString).toSeq).sorted
+        parquetFilesIn(dir).map(_.toString)
       } else {
         // Hive-style directory layout for humans and layout-aware tools,
         // BUT the partition source columns are also written INTO the data
@@ -2294,19 +2174,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       .flatMap(f => SnapshotTable.statType(f.dataType).map(t => f.name -> t))
       .take(8)
     val schemaByName = schema.fields.map(f => f.name -> f.dataType).toMap
-    val footer: Map[String, (Long, Long, Map[String, SnapshotTable.ColStats])] =
-      if (paths.isEmpty) Map.empty
-      // small commits read their footers on the driver: a Spark job costs
-      // ~50-100 ms of fixed scheduling for what is a few milliseconds of
-      // local metadata IO, and every commit pays this pass. Large commits
-      // (the cluster/object-store shape, where per-footer latency is the
-      // cost) keep the distributed pass unchanged.
-      else if (paths.size <= 32)
-        SnapshotTable.parFooterStats(paths, statCols)
-      else spark.sparkContext
-        .parallelize(paths, math.max(1, math.min(paths.size, 32)))
-        .map(p => p -> SnapshotTable.footerStats(p, statCols))
-        .collect().toMap
+    val footer = footerStatsOf(paths, statCols)
     val sketches = ndvSketches(paths, schema)
     paths.map { p =>
       val (rows, bytes, stats) = footer.getOrElse(p, (-1L, -1L, Map.empty[String, SnapshotTable.ColStats]))
@@ -2314,7 +2182,42 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       val partStats = SnapshotTable.partitionValueStats(
         dataDir.toString, p, pcols, schemaByName)
       SnapshotTable.DataFile(p, rows, stats ++ partStats, bytes, schemaVersion,
-        sketches.getOrElse(SnapshotTable.stripScheme(p), Map.empty))
+        sketches.getOrElse(readerPath(p), Map.empty))
+    }
+  }
+
+  /** Footer stats of just-written files, keyed by path. Small commits
+    * (≤ 32 files — every delete ledger, most appends) read them on the
+    * driver pool: a Spark job costs ~50-100 ms of fixed scheduling for
+    * what is a few milliseconds of local metadata IO, and every commit
+    * pays this pass. Large commits (the cluster/object-store shape, where
+    * per-footer latency is the cost) read them in a distributed pass. */
+  private def footerStatsOf(paths: Seq[String],
+      statCols: Seq[(String, String)])
+      : Map[String, (Long, Long, Map[String, SnapshotTable.ColStats])] =
+    if (paths.isEmpty) Map.empty
+    else if (paths.size <= 32) SnapshotTable.parFooterStats(paths, statCols)
+    else spark.sparkContext
+      .parallelize(paths, math.max(1, math.min(paths.size, 32)))
+      .map(p => p -> SnapshotTable.footerStats(p, statCols))
+      .collect().toMap
+
+  /** The parquet files a writer left directly in `dir`, sorted. */
+  private def parquetFilesIn(dir: Path): Seq[Path] =
+    scala.util.Using.resource(Files.list(dir))(
+      _.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet"))
+        .toSeq).sortBy(_.toString)
+
+  /** Move staged files into a fresh `data/<uuid>/` dir (same-filesystem
+    * rename, metadata-only) and return their new paths, sorted. */
+  private def moveIntoData(staged: Seq[Path]): Seq[String] = {
+    val dest = Files.createDirectories(
+      dataDir.resolve(java.util.UUID.randomUUID.toString))
+    staged.sortBy(_.toString).map { p =>
+      val d = dest.resolve(p.getFileName)
+      Files.move(p, d)
+      d.toString
     }
   }
 
@@ -2323,8 +2226,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * sketch-eligible stats column) — one column-pruned Spark pass over
     * the just-written files, grouped by `_metadata.file_path`, using
     * Spark's DataSketches `hll_sketch_agg` (lgK=12, ~1.6% rel. error).
-    * Keyed by scheme-stripped path. Empty map (zero cost) unless the
-    * table opted in. */
+    * Keyed by the reader's path spelling ([[readerPath]]). Empty map
+    * (zero cost) unless the table opted in. */
   private def ndvSketches(paths: Seq[String],
       schema: org.apache.spark.sql.types.StructType)
       : Map[String, Map[String, String]] = {
@@ -2368,8 +2271,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       .agg(aggs.head, aggs.tail: _*)
       .collect()
       .map { row =>
-        val key = SnapshotTable.stripScheme(row.getString(0))
-        key -> cols.indices.flatMap { i =>
+        row.getString(0) -> cols.indices.flatMap { i =>
           Option(row.get(i + 1)).map { v =>
             cols(i)._1 -> java.util.Base64.getEncoder
               .encodeToString(v.asInstanceOf[Array[Byte]])
@@ -2404,17 +2306,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   private[table] def replaceWithStagedDir(baseVersion: Int,
       stagedDir: java.nio.file.Path, operation: String,
       replacedPaths: Option[Set[String]] = None): Int = {
-    val dest = dataDir.resolve(java.util.UUID.randomUUID.toString)
-    Files.createDirectories(dest)
-    val moved = scala.util.Using.resource(Files.list(stagedDir))(
-      _.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq).sortBy(_.toString)
-      .map { p =>
-        val d = dest.resolve(p.getFileName)
-        Files.move(p, d)
-        d.toString
-      }
+    val moved = moveIntoData(parquetFilesIn(stagedDir))
     val schema = org.apache.spark.sql.types.DataType
       .fromJson(snapshot(baseVersion).schemaJson)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
@@ -2448,13 +2340,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * as an append tagged `operation`. Schema union like [[append]]. */
   private[table] def appendStagedFiles(stagedPaths: Seq[java.nio.file.Path],
       schema: org.apache.spark.sql.types.StructType, operation: String): Int = {
-    val dest = dataDir.resolve(java.util.UUID.randomUUID.toString)
-    Files.createDirectories(dest)
-    val moved = stagedPaths.sortBy(_.toString).map { p =>
-      val d = dest.resolve(p.getFileName)
-      Files.move(p, d)
-      d.toString
-    }
+    val moved = moveIntoData(stagedPaths)
     val files = manifestEntries(moved, schema, Seq.empty, latestVersion)
     commitWithRetry(
       base => base.files ++ files,
@@ -2471,13 +2357,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * a legitimate complete-mode result and commits an empty snapshot. */
   private[table] def replaceStagedFiles(stagedPaths: Seq[java.nio.file.Path],
       schema: org.apache.spark.sql.types.StructType, operation: String): Int = {
-    val dest = dataDir.resolve(java.util.UUID.randomUUID.toString)
-    Files.createDirectories(dest)
-    val moved = stagedPaths.sortBy(_.toString).map { p =>
-      val d = dest.resolve(p.getFileName)
-      Files.move(p, d)
-      d.toString
-    }
+    val moved = moveIntoData(stagedPaths)
     val files = manifestEntries(moved, schema, Seq.empty, latestVersion)
     commitWithRetry(_ => files, _ => schema.json, operation,
       nextDeleteFiles = _ => Seq.empty)
@@ -2652,7 +2532,8 @@ object SnapshotTable {
     * gets from per-delete-file referenced-data-file bounds. Paths inside
     * the entries use the reader's `_metadata.file_path` spelling (URI
     * form), which is also how they are produced — self-consistent by
-    * construction. */
+    * construction; a manifest path is compared with them only after
+    * `readerPath` respells it. */
   case class DeleteFile(path: String, rows: Long, bytes: Long = -1L,
       minPath: String = "", maxPath: String = "")
 
@@ -2665,6 +2546,24 @@ object SnapshotTable {
     * find the doomed rows, an equality delete just states the keys. */
   case class EqDeleteFile(path: String, rows: Long, bytes: Long = -1L,
       keyCols: Seq[String] = Seq.empty, atVersion: Int = -1)
+
+  /** True when equality delete `d` applies to the rows of `f`: the file
+    * was added before the delete's commit (or predates addedAt stamps). */
+  private[table] def eqDeleteApplies(d: EqDeleteFile, f: DataFile): Boolean =
+    f.addedAt < 0 || f.addedAt < d.atVersion
+
+  /** Every file snapshot `s` references: data and both delete flavors. */
+  private[table] def referencedPaths(s: Snapshot): Seq[String] =
+    s.files.map(_.path) ++ s.deleteFiles.map(_.path) ++
+      s.eqDeleteFiles.map(_.path)
+
+  /** One commit `s` against its predecessor `p`, as the changelog walk
+    * sees it: data files added, removed and carried, and delete files of
+    * both flavors new at `s` or dropped by it. */
+  private[table] case class CommitDelta(s: Snapshot, p: Snapshot,
+      added: Seq[DataFile], removed: Seq[DataFile], survivors: Seq[DataFile],
+      newDels: Seq[DeleteFile], droppedDels: Seq[DeleteFile],
+      newEqs: Seq[EqDeleteFile], droppedEqs: Seq[EqDeleteFile])
 
   /** `manifestRefs`: when non-empty, the snapshot document stores NO
     * inline file entries — `files` was materialized from these immutable
@@ -2696,13 +2595,6 @@ object SnapshotTable {
         org.apache.spark.sql.types.StringType, nullable = false),
       org.apache.spark.sql.types.StructField("pos",
         org.apache.spark.sql.types.LongType, nullable = false)))
-
-  /** Strip a URI scheme so a manifest path (`/wh/data/f.parquet`) and the
-    * reader's `_metadata.file_path` spelling (`file:///wh/data/f.parquet`)
-    * compare equal for delete-file SCOPING decisions (membership tests
-    * always compare same-origin strings and never need this). */
-  private[table] def stripScheme(p: String): String =
-    p.replaceFirst("^[A-Za-z][A-Za-z0-9+.-]*:/+", "/")
 
   /** Table property selecting the DELETE strategy for SQL `DELETE FROM`:
     * `merge-on-read` writes position deletes; anything else (default)

@@ -105,9 +105,12 @@ class MetadataTablesSpec extends SparkFunSuite {
     assert(hist.isNullAt(0), s"expected null history n_rows, got ${hist.get(0)}")
   }
 
-  test("NDV sketches: metadata-only distinct estimates within 5%, carried through compaction") {
+  // the sketch pass keys files by the reader's path spelling, which
+  // URI-encodes a space that the manifest path keeps plain
+  for ((name, suffix) <- Seq("meta-ndv" -> "", "meta ndv" -> " (location with a space)"))
+  test(s"NDV sketches: metadata-only distinct estimates within 5%, carried through compaction$suffix") {
     import org.apache.spark.sql.functions._
-    val loc = scratch("meta-ndv")
+    val loc = scratch(name)
     val events = graft.Tables.load(spark, sf, "events")
       .select("event_id", "user_id", "event_type", "value", "ts")
     // opt in BEFORE the data lands: create empty, set the property, append
@@ -144,12 +147,15 @@ class MetadataTablesSpec extends SparkFunSuite {
     assertClose("event_id")
 
     // the files metadata table surfaces per-file estimates as JSON
-    val wh = scratch("meta-ndv-wh")
-    spark.conf.set("spark.sql.catalog.mtn", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.mtn.warehouse", wh)
+    // one catalog per location: a catalog keeps the warehouse it was
+    // first initialized with
+    val cat = if (suffix.isEmpty) "mtn" else "mtns"
+    val wh = scratch(s"${name.replace(' ', '-')}-wh")
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$wh/db"))
     t.cloneTo(s"$wh/db/ndvt")
-    val ndvJson = spark.sql("SELECT ndv_json FROM mtn.db.ndvt.files")
+    val ndvJson = spark.sql(s"SELECT ndv_json FROM $cat.db.ndvt.files")
       .collect().map(_.getString(0))
     assert(ndvJson.nonEmpty && ndvJson.forall(_.contains("\"user_id\"")))
   }
