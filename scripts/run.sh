@@ -2,6 +2,8 @@
 # Run a graft main class directly against the compiled classes + Spark jars
 # (avoids sbt JVM startup per invocation). Usage: scripts/run.sh graft.Verify args...
 set -e
+# classes of the checkout this script lives in; no cd, callers pass relative paths
+CLASSES="$(dirname "$0")/../target/scala-2.13/classes"
 ADDOPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic \
@@ -12,5 +14,5 @@ exec java $ADDOPENS \
   -Xmx${SPARK_DRIVER_MEM:-16g} \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:/opt/spark/jars/*" \
   "$@"

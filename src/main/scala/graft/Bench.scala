@@ -155,16 +155,20 @@ object Bench {
     * machine's own floor. The flag is then re-judged on the published
     * value: a successful retry clears it (self-healed measurement), a
     * still-hot retry keeps it visible. Returns (publishedSec,
-    * stillFlagged). Queries that never flagged keep their original
-    * statistic untouched — additions-only.
+    * stillFlagged, keptRep): keptRep is the retry's elapsed to append to
+    * the query's reps, None for a failed retry (`retrySec` < 0) — a
+    * fast-failing rep must never reach the elapsed floor, which takes the
+    * min over reps and would flag every later clean run hot. Queries that
+    * never flagged keep their original statistic untouched —
+    * additions-only.
     */
   def retryOutcome(isWrite: Boolean, published: Double, retrySec: Double,
-      floor: Option[Double]): (Double, Boolean) = {
-    val better =
-      if (retrySec >= 0 && retrySec < published) retrySec else published
+      floor: Option[Double]): (Double, Boolean, Option[Double]) = {
+    val kept = Option(retrySec).filter(_ >= 0)
+    val better = kept.filter(_ < published).getOrElse(published)
     val still =
       if (isWrite) writeHotRule(better, floor) else readHotRule(better, floor)
-    (better, still)
+    (better, still, kept)
   }
 
   /** Queries whose frame CONSTRUCTION runs real Spark jobs (in-query BPE
@@ -195,51 +199,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // SPARK_GRAFT_REPS=1 disables the median protocol for quick local runs.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir", Tables.scratch("warehouse"))
-      .config("spark.ui.enabled", "false")
-      // let AQE re-size exchanges around persisted frames (guide §2.2):
-      // the default pins a cached plan's 32-partition layout onto every
-      // consumer, so each dynamic-table refresh ran 32-task stages over
-      // kilobyte deltas; with this on, AQE coalesces them by byte size —
-      // the same scale-adaptive sizing every uncached exchange already gets
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // snapshot-table reads pass explicit leaf-file lists whose sizes the
-      // manifest already knows; above this threshold Spark still launches
-      // a distributed listing JOB per read (~0.3 s here for a 240-file
-      // table — pure overhead on a local FS). 512 keeps small tables on
-      // the driver's microsecond stat path; genuinely large tables (>512
-      // files — any table at cluster scale) keep the parallel listing.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      // parquet row-group size, parameterized (guide §6): row groups
-      // should track the bytes a writer will actually put in the file.
-      // This workload's dynamic-partition commits open hundreds of
-      // writers for KB-scale files, and the 128 MB default makes each
-      // open reserve buffer capacity ~4 orders of magnitude over the
-      // data — measured ~1.0 s of the 240-file write floor (q55b warm
-      // 4.2 -> 3.1 s with 8 MB; 1 MB measures the same, so 8 MB is kept
-      // as the less aggressive bound). A deployment writing real
-      // 128 MB - 1 GB files sets this back up to the default via the env.
-      .config("parquet.block.size",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_BLOCK_BYTES", "8388608"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Committer v2 (task-side rename): the v1 default serializes a
-    // driver-side move of every output file at job commit — measurable per
-    // write here and a known object-store cliff at scale. Safe for this
-    // engine everywhere: reads are never pointed at half-committed
-    // directories (snapshot tables publish via the atomic pointer swap;
-    // scratch dirs are consumed only after the write returns).
-    spark.sparkContext.hadoopConfiguration
-      .set("mapreduce.fileoutputcommitter.algorithm.version", "2")
+    val spark = GraftSession.build()
 
     // All JSON numbers go through Locale.ROOT: the f"" interpolator uses
     // the JVM default locale, and a comma-decimal locale would emit
@@ -372,7 +334,11 @@ object Bench {
     // is an attribution run — always apply the median protocol there, even
     // for scan-bound queries the full run times once (the full run keeps
     // scan queries at 1 rep so its total stays comparable across rounds).
+    // It also prints each timed rep's per-job table (wall, driver gap,
+    // stages, tasks, call site) to stderr, after that rep's timed window.
     val isolated = names.size == 1
+    val jobLog = if (isolated) Some(new graft.metrics.JobLog(spark.sparkContext))
+      else None
 
     // Per-query plan_ms FLOORS, persisted across runs on this machine
     // (keyed by sf dir — plan cost scales with metadata size). The r18
@@ -484,7 +450,13 @@ object Bench {
         else if (reps > 1) 2
         else 1
       System.err.println(s"[bench] start $name x$n @${java.time.LocalTime.now}")
-      val runs = (1 to n).map(_ => timeRep(fn))
+      val runs = (1 to n).map { i =>
+        jobLog.foreach(_.clear())
+        val r = timeRep(fn)
+        jobLog.foreach(l => System.err.print(l.table(
+          s"$name rep $i: ${jnum(r._1, 3)} s, plan_ms ${jnum(r._6, 1)}, ${r._3.take(80)}")))
+        r
+      }
       // Published elapsed: MEDIAN for the write family (reps are
       // independent rebuilds whose genuine cost the median tracks;
       // min would systematically understate commit machinery), MIN for
@@ -549,11 +521,12 @@ object Bench {
         System.err.println(s"[bench] retry ${r.name} @${java.time.LocalTime.now}")
         val t = timeRep(SparkEntry.queries(r.name))
         val retrySec = if (t._3 == "OK") t._1 else -1.0
-        val (better, _) = retryOutcome(
+        val (better, _, kept) = retryOutcome(
           writeFamily(r.name) || extraReps(r.name), r.sec, retrySec,
           priorElapsedFloors.get(r.name))
-        r.copy(sec = better, repSecs = r.repSecs :+ t._1,
-          repLoads = r.repLoads :+ t._5, fixtureMs = r.fixtureMs + t._7)
+        r.copy(sec = better, repSecs = r.repSecs ++ kept,
+          repLoads = r.repLoads ++ kept.map(_ => t._5),
+          fixtureMs = r.fixtureMs + t._7)
       }
     }
     val retriedNames = names.filter(needRetry)

@@ -1,38 +1,29 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev-only: dump `.explain("formatted")` for the named queries into a
+/** Dev-only: dump `.explain("formatted")` for the selected queries into a
   * directory (`plans/r21/<query>_<tag>.txt`) — the judge-checkable plan
-  * evidence for OPTIMIZATION_r21.md. Write-family queries execute their
-  * imperative commits during frame construction; the dumped plan is the
-  * final verified read, which is what the registry returns.
+  * evidence for OPTIMIZATION_r21.md, and the audit of plan properties
+  * (broadcast joins, partition pruning, pushed filters, whole-stage
+  * codegen spans, top-k TakeOrderedAndProject). Write-family queries
+  * execute their imperative commits during frame construction; the dumped
+  * plan is the final verified read, which is what the registry returns.
   *
   * Usage: PlanDump <outDir> <tag> <query1,query2,...> [sfDir]
+  * Each list entry selects every registered query whose name contains it,
+  * so a full name picks that query and `q58` picks q58, q58b and q58c.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(outDir, tag, list) = args.take(3)
     val sfDir = if (args.length > 3) args(3) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir", Tables.scratch("warehouse"))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("parquet.block.size",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_BLOCK_BYTES", "8388608"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark.sparkContext.hadoopConfiguration
-      .set("mapreduce.fileoutputcommitter.algorithm.version", "2")
+    val wanted = list.split(",").filter(_.nonEmpty)
+    val names = SparkEntry.queries.keys.toSeq.sorted
+      .filter(n => wanted.exists(n.contains))
+    wanted.filterNot(w => names.exists(_.contains(w)))
+      .foreach(w => System.err.println(s"[plandump] $w matches no query"))
+    val spark = GraftSession.build()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    list.split(",").filter(_.nonEmpty).foreach { name =>
+    names.foreach { name =>
       try {
         Bench.sweepCaches(spark)
         val df = SparkEntry.queries(name)(spark, sfDir)

@@ -123,11 +123,13 @@ object Tables {
   val fixtureBuildNanos = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Scratch space for operator outputs (partitioned layouts, snapshot
-    * tables, CTAS warehouses, streaming checkpoints). Kept under the
-    * repo's own target/ so nothing outside /root/repo is touched.
+    * tables, CTAS warehouses, streaming checkpoints): `target/graft-scratch`
+    * under the JVM's working directory, which sbt's forked tests and `run`
+    * set to the project base — the convention of Spark's own default
+    * `spark-warehouse` — so each checkout keeps its own tables.
     */
   def scratch(sub: String): String = {
-    val p = java.nio.file.Paths.get("/root/repo/target/graft-scratch", sub)
+    val p = java.nio.file.Paths.get("target", "graft-scratch", sub).toAbsolutePath
     java.nio.file.Files.createDirectories(p.getParent)
     p.toString
   }

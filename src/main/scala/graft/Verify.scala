@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -59,26 +58,7 @@ object Verify {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.warehouse.dir", Tables.scratch("warehouse"))
-      .config("spark.ui.enabled", "false")
-      // same planning/committer settings as Bench (see the rationale
-      // there): correctness is verified under the exact confs the bench
-      // times, so an optimization can never pass here and diverge there
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "512")
-      .config("parquet.block.size",
-        sys.env.getOrElse("SPARK_GRAFT_PARQUET_BLOCK_BYTES", "8388608"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.hadoopConfiguration
-      .set("mapreduce.fileoutputcommitter.algorithm.version", "2")
+    val spark = GraftSession.build() // the session Bench times under
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (driver always runs the full set): a
     // comma-separated allowlist of query names. The oracle dump below is

@@ -1231,24 +1231,18 @@ object Ops {
       : java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession] =
     new java.util.concurrent.ConcurrentHashMap()
 
-  /** An extension-injected (GovernanceRule-active) session on the caller's
-    * SparkContext, cached per caller: `spark.sql.extensions` is a static
-    * conf, ignored once the context exists, so the governed session is
-    * built programmatically via `withExtensions`. */
-  private def governedFor(s: SparkSession): SparkSession =
+  /** An extension-injected (GovernanceRule-active) engine session on the
+    * caller's SparkContext, cached per caller: `spark.sql.extensions` is a
+    * static conf, ignored once the context exists, so the governed session
+    * is built programmatically via `withExtensions`. */
+  private[graft] def governedFor(s: SparkSession): SparkSession =
     governedSession.computeIfAbsent(s, caller => {
       SparkSession.clearActiveSession()
       SparkSession.clearDefaultSession()
-      val g = SparkSession.builder()
-        .master(caller.sparkContext.master)
+      val g = graft.GraftSession
+        .builder(caller.conf.get("spark.sql.shuffle.partitions").toInt)
         .appName("graft-governed")
-        .config("spark.sql.shuffle.partitions",
-          caller.conf.get("spark.sql.shuffle.partitions"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .withExtensions(new graft.plans.GraftExtensions)
-        .config("spark.ui.enabled", "false")
         .getOrCreate()
       SparkSession.setDefaultSession(caller)
       SparkSession.setActiveSession(caller)

@@ -82,22 +82,35 @@ class BenchAdjudicationSpec extends AnyFunSuite {
     // 1.13 s against a 0.15 s floor (flagged), the retry rep lands clean
     // at 0.16 s -> published becomes 0.16, flag clears
     assert(Bench.retryOutcome(isWrite = false, 1.13, 0.16, Some(0.15)) ==
-      ((0.16, false)))
+      ((0.16, false, Some(0.16))))
     // the retry itself ran contended too: published stays the better of
     // the two and the flag STAYS — a retry must never silently bless a
     // still-hot number
     assert(Bench.retryOutcome(isWrite = false, 1.13, 0.98, Some(0.15)) ==
-      ((0.98, true)))
+      ((0.98, true, Some(0.98))))
     // write-family: contended 7.93 s median vs a clean 1.35 s rebuild —
     // the single clean rebuild wins and clears write_hot
     assert(Bench.retryOutcome(isWrite = true, 7.93, 1.35, Some(1.30)) ==
-      ((1.35, false)))
+      ((1.35, false, Some(1.35))))
     // a retry SLOWER than the published value never replaces it
     assert(Bench.retryOutcome(isWrite = false, 1.13, 2.40, Some(0.15)) ==
-      ((1.13, true)))
+      ((1.13, true, Some(2.40))))
     // a FAILED retry (sentinel -1) keeps the original value and flag
     assert(Bench.retryOutcome(isWrite = true, 7.93, -1.0, Some(1.30)) ==
-      ((7.93, true)))
+      ((7.93, true, None)))
+  }
+
+  test("a failed retry rep never reaches the elapsed floor") {
+    // the floor is the min over a query's reps: a retry that errors out
+    // after 0.05 s must not be appended, or it would store a 0.05 s floor
+    // and flag every later clean 1.3 s run write_hot
+    val (sec, still, kept) =
+      Bench.retryOutcome(isWrite = true, 7.93, -1.0, Some(1.30))
+    assert(kept.isEmpty)
+    assert((sec, still) == ((7.93, true)))
+    // an OK retry is a real rep: it joins the reps the floor reads
+    assert(Bench.retryOutcome(isWrite = true, 7.93, 1.35, Some(1.30))._3 ==
+      Some(1.35))
   }
 
   test("median is the true middle for odd and even rep counts") {

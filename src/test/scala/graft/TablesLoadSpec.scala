@@ -100,4 +100,9 @@ class TablesLoadSpec extends SparkFunSuite {
       s"l_shipdate filter not pushed: $scan")
     assert(q.count() == 245)
   }
+
+  test("scratch root sits under the JVM's working directory") {
+    assert(java.nio.file.Paths.get(Tables.scratch("probe"))
+      .startsWith(java.nio.file.Paths.get("").toAbsolutePath))
+  }
 }
