@@ -273,6 +273,9 @@ object ScaleProbe {
       System.err.println(s"[probe] building ${factor}x dataset at $sf1 from $base")
       build(spark, base, sf1, factor)
     }
+    // a cached dataset skips the build, so warm the JVM here either way:
+    // the first timed query must not absorb JVM start-up
+    Bench.warmUp(spark, base, writePath = true)
 
     // stage-level shuffle-write accounting; queries that clone sessions
     // still share the one SparkContext, so the listener sees every stage

@@ -396,8 +396,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         s"nested column $what not supported: ${fieldNames.mkString(".")}")
       fieldNames(0)
     }
-    var schema = org.apache.spark.sql.types.DataType
-      .fromJson(t.snapshot(t.latestVersion).schemaJson).asInstanceOf[StructType]
+    var schema = t.snapshot(t.latestVersion).schema
     var renamed = Seq.empty[(String, String)]
     var propSet = Map.empty[String, String]
     var propUnset = Set.empty[String]

@@ -9,7 +9,7 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate,
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.sources.InsertableRelation
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** DSv2 table over a snapshot-log location: reads delegate to Spark's
@@ -34,8 +34,7 @@ class GraftTable(tableName: String, location: String,
 
   override def name(): String = tableName
 
-  override def schema(): StructType =
-    DataType.fromJson(snap.schemaJson).asInstanceOf[StructType]
+  override def schema(): StructType = snap.schema
 
   override def capabilities(): util.Set[TableCapability] =
     util.Set.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,

@@ -167,9 +167,7 @@ object MetadataTables {
         // a V1Scan relation plans [[SnapshotTable.changes]]'s own
         // distributed DataFrame (per-version changed-file scans +
         // scoped semi-joins) when the query executes
-        val dataSchema = org.apache.spark.sql.types.DataType
-          .fromJson(t.snapshot(t.latestVersion).schemaJson)
-          .asInstanceOf[StructType]
+        val dataSchema = t.snapshot(t.latestVersion).schema
         val cdcSchema = StructType(dataSchema.fields ++ Seq(
           StructField("_change_type", StringType, nullable = false),
           StructField("_commit_version", IntegerType, nullable = false),

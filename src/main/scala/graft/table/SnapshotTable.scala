@@ -14,19 +14,32 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Commit protocol (mirrors the reference's 4-step Iceberg commit,
   * `aws-community-builders-presentation.md:203-224`):
   *   1. write new data files into immutable locations under `data/`;
-  *   2. build the next snapshot: full file list + schema + operation;
+  *   2. build the next snapshot: every operation is ONE edit of the
+  *      latest snapshot (`base => base.copy(...)`) handed to the one
+  *      commit function, [[commit]], which alone stamps version,
+  *      timestamp, operation and manifest layout, and writes the
+  *      committed version into every entry that arrives unstamped (a new
+  *      data file's `addedAt`, an equality delete's or a rename's
+  *      `atVersion`);
   *   3. serialize to `_snapshots/.tmp-*`;
   *   4. atomically publish at `_snapshots/v%05d.json` — the commit point,
   *      isolated behind [[CommitPrimitive]] (POSIX hard link here; S3
   *      conditional PUT / lock table at cloud scale — see its scaladoc).
   *      A concurrent writer that loses the race observes publish=false,
-  *      re-reads the latest snapshot, and
-  *      retries on top of it (optimistic concurrency). Appends always
-  *      rebase; rewrite ops (compact) rebase only when their input file
-  *      set is still live, and copy-on-write ops (upsert/delete/migrate
-  *      via [[replace]]) abort with `ConcurrentModificationException` when
-  *      the base snapshot moved — Iceberg-style conflict validation, so a
-  *      concurrent commit is never silently dropped.
+  *      re-reads the latest snapshot, and re-runs its edit on top of it
+  *      (optimistic concurrency). An edit aborts with
+  *      `ConcurrentModificationException` through one of three conflict
+  *      rules, so a concurrent commit is never silently dropped
+  *      (Iceberg-style validation):
+  *       - base unmoved since the version the caller validated
+  *         ([[requireUnmoved]]: copy-on-write rewrites, ALTER, SET
+  *         PARTITION SPEC, merge-on-read MERGE, fast_forward);
+  *       - scanned inputs still live ([[requireLive]]: compact,
+  *         position delete, fold_eq_deletes);
+  *       - delete ledgers unchanged ([[requireLedgers]]: compact,
+  *         fold_eq_deletes).
+  *      Appends, equality deletes, upsertMor and property changes always
+  *      rebase. `CommitConflictSpec` pins the matrix.
   *
   * Readers pin a snapshot once at scan creation (snapshot isolation):
   * `read`/`readVersion`/`readAsOf` resolve the file list from one JSON
@@ -113,10 +126,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val to = if (toVersion < 0) latestVersion else toVersion
     require(to >= sinceVersion, s"empty version range v$sinceVersion..v$to")
     val added = deltaFileList(sinceVersion, to, "incremental read")
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(snapshot(to).schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    readFileList(added, schema, snapshot(to).renames)
+    readFileList(added, snapshot(to).schema, snapshot(to).renames)
   }
 
   /** THE appends-only delta algorithm, shared verbatim by every
@@ -217,8 +227,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val to = if (toVersion < 0) latestVersion else toVersion
     require(to >= sinceVersion, s"empty version range v$sinceVersion..v$to")
     val toSnap = snapshot(to)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(toSnap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = toSnap.schema
     val declared = schema.fieldNames.toSeq
     def tagged(df: DataFrame, typ: String, s: SnapshotTable.Snapshot): DataFrame =
       df.select(declared.map(col): _*)
@@ -301,8 +310,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val to = if (toVersion < 0) latestVersion else toVersion
     require(to >= sinceVersion, s"empty version range v$sinceVersion..v$to")
     val toSnap = snapshot(to)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(toSnap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = toSnap.schema
     keyCols.foreach(k => require(schema.fieldNames.contains(k),
       s"changedKeyRows: unknown key column $k"))
     val deltas = commitDeltas(sinceVersion, to)
@@ -433,9 +441,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * (no mergeSchema footer sampling needed — the log owns the schema). */
   def readVersion(version: Int): DataFrame = {
     val snap = snapshot(version)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    readSnapshotFiles(snap, snap.files, schema)
+    readSnapshotFiles(snap, snap.files, snap.schema)
   }
 
   /** Read `files` under `snap`'s schema with `snap`'s delete ledger
@@ -654,8 +660,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   /** Commit an empty snapshot carrying only a schema (SQL CREATE TABLE). */
   private[table] def commitEmpty(schemaJson: String,
       partitionColsIfNew: Seq[String] = Seq.empty): Int =
-    commitWithRetry(base => base.files, _ => schemaJson, "create",
-      partitionColsIfNew)
+    commit("create")(b => b.copy(schemaJson = schemaJson,
+      partitionCols = if (b.version < 0) partitionColsIfNew else b.partitionCols))
 
   /** One atomic ALTER commit for a BATCH of schema changes: the final
     * schema plus every rename the batch performed (logged at the commit's
@@ -680,19 +686,14 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     // main through fast_forward (whose file re-stamping assumes every
     // branch file stores the current column names) — refuse at the source.
     requireMain("ALTER (schema evolution)")
-    commitWithRetry(
-      b => {
-        if (b.version != validatedAt)
-          throw new java.util.ConcurrentModificationException(
-            s"table $location moved v$validatedAt -> v${b.version} during " +
-              "ALTER — re-validate the schema change against the current " +
-              "snapshot and retry")
-        b.files
-      },
-      _ => schemaJson, "alter",
-      nextRenames = (b, v) =>
-        b.renames ++ renamed.map { case (n, o) => SnapshotTable.Rename(v, n, o) },
-      nextProperties = b => (b.properties ++ propSet) -- propUnset)
+    commit("alter") { b =>
+      requireUnmoved(b, validatedAt, "ALTER", " — re-validate the schema " +
+        "change against the current snapshot and retry")
+      b.copy(schemaJson = schemaJson,
+        renames = b.renames ++ renamed.map { case (n, o) =>
+          SnapshotTable.Rename(SnapshotTable.Unstamped, n, o) },
+        properties = (b.properties ++ propSet) -- propUnset)
+    }
   }
 
   /** Partition spec EVOLUTION (Iceberg's headline metadata-only layout
@@ -733,8 +734,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     requireMain("ALTER (partition spec)")
     val base = snapshot(if (validatedAt >= 0) validatedAt else latestVersion)
     val fields = spec.map(PartitionFields.parse)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = base.schema
     def colType(c: String): org.apache.spark.sql.types.DataType =
       schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
         throw new IllegalArgumentException(
@@ -762,17 +762,11 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     require(names.distinct == names,
       s"duplicate partition fields in spec: ${names.mkString(", ")}")
     if (names == base.partitionCols) return base.version
-    commitWithRetry(
-      b => {
-        if (b.version != base.version)
-          throw new java.util.ConcurrentModificationException(
-            s"table $location moved v${base.version} -> v${b.version} " +
-              "during SET PARTITION SPEC — re-validate against the " +
-              "current snapshot and retry")
-        b.files
-      },
-      b => b.schemaJson, "set-partition-spec",
-      nextPartitionCols = _ => names)
+    commit("set-partition-spec") { b =>
+      requireUnmoved(b, base.version, "SET PARTITION SPEC",
+        " — re-validate against the current snapshot and retry")
+      b.copy(partitionCols = names)
+    }
   }
 
   /** ALTER TABLE … RENAME COLUMN — metadata-only (Iceberg T8 beyond ADD):
@@ -791,8 +785,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * name-mapped design refuses instead). */
   def renameColumn(oldName: String, newName: String): Int = {
     val base = snapshot(latestVersion)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = base.schema
     require(schema.fieldNames.contains(oldName), s"no such column: $oldName")
     require(!schema.fieldNames.contains(newName),
       s"column $newName already exists")
@@ -820,8 +813,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * files still store values under it, which would resurrect. */
   def dropColumn(name: String): Int = {
     val base = snapshot(latestVersion)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = base.schema
     require(schema.fieldNames.contains(name), s"no such column: $name")
     val psrc = partitionCols.map(PartitionFields.parse).map(_.source)
     require(!psrc.contains(name), s"cannot drop partition source column $name")
@@ -846,7 +838,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   def widenColumn(name: String, to: org.apache.spark.sql.types.DataType): Int = {
     import org.apache.spark.sql.types._
     val base = snapshot(latestVersion)
-    val schema = DataType.fromJson(base.schemaJson).asInstanceOf[StructType]
+    val schema = base.schema
     val field = schema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"no such column: $name"))
     val ok = (field.dataType, to) match {
@@ -875,8 +867,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   private[table] def historicalNames: Set[String] =
     versions.flatMap { v =>
       val s = snapshot(v)
-      org.apache.spark.sql.types.DataType.fromJson(s.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq ++
+      s.schema.fieldNames.toSeq ++
         s.renames.flatMap(r => Seq(r.newName, r.oldName))
     }.toSet
 
@@ -894,22 +885,15 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       setProps: Map[String, String] = Map.empty): Int = {
     val pcols = if (latestVersion >= 0) partitionCols else partitionColsIfNew
     val staged = stage(df, pcols)
-    commitWithRetry(
-      base => base.files ++ staged,
-      base => if (base.version < 0) df.schema.json
-              else SnapshotTable.unionSchema(base.schemaJson, df.schema),
-      operation, partitionColsIfNew,
-      nextProperties = base => base.properties ++ setProps)
+    commit(operation)(b => b.copy(files = b.files ++ staged,
+      schemaJson = SnapshotTable.unionSchema(b, df.schema),
+      partitionCols = if (b.version < 0) partitionColsIfNew else b.partitionCols,
+      properties = b.properties ++ setProps))
   }
 
   /** Replace the whole table content atomically (INSERT OVERWRITE —
     * last-writer-wins by SQL semantics). */
-  def overwrite(df: DataFrame): Int = {
-    val staged = stage(df, partitionCols)
-    commitWithRetry(_ => staged, _ => df.schema.json, "overwrite",
-      nextDeleteFiles = _ => Seq.empty,
-      nextEqDeleteFiles = (_, _) => Seq.empty)
-  }
+  def overwrite(df: DataFrame): Int = commitReplacement(df, "overwrite")(_ => ())
 
   /** Copy-on-write overwrite validated against the snapshot the caller
     * derived `df` from: if another writer committed after `baseVersion`,
@@ -920,19 +904,22 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * files stay on disk (time travel) so the rewrite can stream from them
     * while writing the replacement. */
   def replace(baseVersion: Int, df: DataFrame,
-      operation: String = "overwrite"): Int = {
+      operation: String = "overwrite"): Int =
+    commitReplacement(df, operation)(
+      requireUnmoved(_, baseVersion, s"copy-on-write $operation"))
+
+  /** Stage `df` as the table's whole new content and commit it once
+    * `check` passes on the base. The content was derived from a
+    * deletes-applied read (or is new), so both delete ledgers start
+    * clean. */
+  private def commitReplacement(df: DataFrame, operation: String)(
+      check: SnapshotTable.Snapshot => Unit): Int = {
     val staged = stage(df, partitionCols)
-    commitWithRetry(
-      base => {
-        if (base.version != baseVersion)
-          throw new java.util.ConcurrentModificationException(
-            s"table $location moved v$baseVersion -> v${base.version} during copy-on-write $operation")
-        staged
-      }, _ => df.schema.json, operation,
-      // the whole content was re-derived from a deletes-applied read, so
-      // the replacement starts with a clean delete ledger
-      nextDeleteFiles = _ => Seq.empty,
-      nextEqDeleteFiles = (_, _) => Seq.empty)
+    commit(operation) { b =>
+      check(b)
+      b.copy(files = staged, schemaJson = df.schema.json,
+        deleteFiles = Seq.empty, eqDeleteFiles = Seq.empty)
+    }
   }
 
   /** Delete data files under `data/` that NO snapshot references —
@@ -984,13 +971,13 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * old content. Metadata-only: no data is read or written. */
   def rollbackTo(version: Int): Int = {
     val target = snapshot(version)
-    commitWithRetry(_ => target.files, _ => target.schemaJson, "rollback",
-      // the delete ledger is part of the content being restored: rolling
-      // back past a MOR delete un-deletes those rows (restored files keep
-      // their original addedAt, so restored equality deletes keep their
-      // exact sequence scoping)
-      nextDeleteFiles = _ => target.deleteFiles,
-      nextEqDeleteFiles = (_, _) => target.eqDeleteFiles)
+    // the delete ledger is part of the content being restored: rolling
+    // back past a MOR delete un-deletes those rows (restored files keep
+    // their original addedAt, so restored equality deletes keep their
+    // exact sequence scoping)
+    commit("rollback")(_.copy(files = target.files,
+      schemaJson = target.schemaJson, deleteFiles = target.deleteFiles,
+      eqDeleteFiles = target.eqDeleteFiles))
   }
 
   /** In-place migration (Iceberg's `add_files` — the reference demo's
@@ -1074,9 +1061,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
         s"file), e.g. ${dups.head} — re-running would double-count rows. " +
         "Pass a directory of new files only, or set " +
         "check_duplicate_files => false for a deliberate re-adoption.")
-    val declared = org.apache.spark.sql.types.DataType
-      .fromJson(snap.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val declared = snap.schema
     // EVERY file's footer participates via mergeSchema: a mixed-schema
     // directory (a column's type changed mid-migration) fails HERE as a
     // merge conflict or a declared-column mismatch — before any link or
@@ -1105,7 +1090,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     // store (same hazard replaceWithStagedDir guards). Concurrent pure
     // APPENDS are benign and ride through the retry.
     val entries = manifestEntries(linked, declared, Seq.empty, snap.version)
-    commitWithRetry(base => {
+    commit("add_files") { base =>
       if (base.schemaJson != snap.schemaJson || base.renames != snap.renames)
         throw new java.util.ConcurrentModificationException(
           s"add_files into $location: schema changed concurrently " +
@@ -1125,8 +1110,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
               s"adopted ${raced.size} file(s) from $sourceDir, e.g. " +
               s"${raced.head} — aborting to avoid double-counting rows")
       }
-      base.files ++ entries
-    }, base => base.schemaJson, "add_files")
+      base.copy(files = base.files ++ entries)
+    }
   }
 
   /** Zero-copy clone (Snowflake `CREATE TABLE … CLONE`): a NEW independent
@@ -1195,10 +1180,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       // (atVersion >= 1) correctly apply to them
       f.copy(path = dest.toString, schemaVersion = 0, addedAt = 0)
     }
-    t.commitWithRetry(_ => files, _ => snap.schemaJson, "clone",
-      snap.partitionCols,
-      nextRenames = (_, _) => Seq.empty,
-      nextProperties = _ => snap.properties)
+    t.commit("clone")(b => b.copy(files = files, schemaJson = snap.schemaJson,
+      partitionCols = if (b.version < 0) snap.partitionCols else b.partitionCols,
+      renames = Seq.empty, properties = snap.properties))
     t
   }
 
@@ -1345,27 +1329,23 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
         "committed on the branch — their version scoping cannot survive " +
         "the single-version publish; compact the branch to fold them, " +
         "then fast_forward")
-    commitWithRetry(
-      base => {
-        if (base.version != seedV)
-          throw new java.util.ConcurrentModificationException(
-            s"table $location moved v$seedV -> v${base.version} since branch " +
-              s"'$name' was created — fast_forward must be a pure pointer " +
-              "advance; recreate the branch from the current head and replay")
-        head.files.map(f =>
+    commit("fast_forward") { b =>
+      requireUnmoved(b, seedV, s"fast_forward of branch '$name'",
+        " — fast_forward must be a pure pointer advance; recreate the " +
+          "branch from the current head and replay")
+      b.copy(
+        // branch files logically land on main AT the publish version:
+        // both the rename-resolution stamp and the equality-delete
+        // sequence position re-base to it (the commit stamps addedAt)
+        files = head.files.map(f =>
           if (seedPaths(f.path)) f
-          // branch files logically land on main AT the publish version:
-          // both the rename-resolution stamp and the equality-delete
-          // sequence position re-base to it
-          else f.copy(schemaVersion = base.version + 1,
-            addedAt = base.version + 1))
-      },
-      _ => head.schemaJson, "fast_forward",
-      nextProperties = _ => head.properties,
-      // the branch's delete ledger is part of the state being published
-      // (its entries name shared data/ paths, valid on main unchanged)
-      nextDeleteFiles = _ => head.deleteFiles,
-      nextEqDeleteFiles = (_, _) => head.eqDeleteFiles)
+          else f.copy(schemaVersion = b.version + 1,
+            addedAt = SnapshotTable.Unstamped)),
+        schemaJson = head.schemaJson, properties = head.properties,
+        // the branch's delete ledger is part of the state being published
+        // (its entries name shared data/ paths, valid on main unchanged)
+        deleteFiles = head.deleteFiles, eqDeleteFiles = head.eqDeleteFiles)
+    }
   }
 
   /** Scoped overwrite (INSERT OVERWRITE … PARTITION / replaceWhere):
@@ -1389,8 +1369,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     import org.apache.spark.sql.functions.{coalesce, lit, not}
     val baseV = latestVersion
     val base = snapshot(baseV)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = base.schema
     val rewrite = StatsPruning.prune(base.files,
       prunablePredicates(cond, schema))
     val rewriteSet = rewrite.map(_.path).toSet
@@ -1409,16 +1388,12 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
         .filter(not(coalesce(cond, lit(false))))
         .unionByName(df, allowMissingColumns = true)
     val staged = stage(replacement, partitionCols)
-    commitWithRetry(
-      cur => {
-        if (cur.version != baseV)
-          throw new java.util.ConcurrentModificationException(
-            s"table $location moved v$baseV -> v${cur.version} during scoped $operation")
-        cur.files.filterNot(f => rewriteSet(f.path)) ++ staged
-      },
-      cur => SnapshotTable.unionSchema(cur.schemaJson, replacement.schema),
-      operation,
-      nextProperties = cur => cur.properties ++ setProps)
+    commit(operation) { b =>
+      requireUnmoved(b, baseV, s"scoped $operation")
+      b.copy(files = b.files.filterNot(f => rewriteSet(f.path)) ++ staged,
+        schemaJson = SnapshotTable.unionSchema(b, replacement.schema),
+        properties = b.properties ++ setProps)
+    }
   }
 
   /** Bin-pack compaction (reference T7: target 128–256 MB files,
@@ -1471,31 +1446,16 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     // write sort order for this rewrite; plain compaction honors it
     val staged = stage(arranged, base.partitionCols,
       applySortOrder = zorderBy.isEmpty && clusterBy.isEmpty)
-    commitWithRetry(
-      cur => {
-        val live = cur.files.map(_.path).toSet
-        if (!inputs.subsetOf(live))
-          throw new java.util.ConcurrentModificationException(
-            s"compaction inputs at $location were rewritten concurrently")
-        // a delete committed since the compaction read started would be
-        // folded WITHOUT its rows removed — abort, never drop a
-        // concurrent delete silently (both ledger flavors)
-        if (cur.deleteFiles.map(_.path) != base.deleteFiles.map(_.path))
-          throw new java.util.ConcurrentModificationException(
-            s"position deletes landed on $location during compaction")
-        if (cur.eqDeleteFiles.map(_.path) != base.eqDeleteFiles.map(_.path))
-          throw new java.util.ConcurrentModificationException(
-            s"equality deletes landed on $location during compaction")
-        cur.files.filterNot(f => inputs(f.path)) ++ staged
-      },
-      cur => if (cur.version < 0) base.schemaJson else cur.schemaJson,
-      "compact",
+    commit("compact") { b =>
+      requireLive(b, inputs, "compaction")
+      requireLedgers(b, base, "compaction")
       // the rewrite read applied every delete entry (readVersion), so the
       // compacted snapshot folds them in and starts a clean ledger — the
       // MOR maintenance contract: compaction restores the vectorized
       // plain-scan fast path
-      nextDeleteFiles = _ => Seq.empty,
-      nextEqDeleteFiles = (_, _) => Seq.empty)
+      b.copy(files = b.files.filterNot(f => inputs(f.path)) ++ staged,
+        deleteFiles = Seq.empty, eqDeleteFiles = Seq.empty)
+    }
   }
 
   /** Global [lo, hi] of column `c` in code-space units for Z-order
@@ -1589,8 +1549,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     import org.apache.spark.sql.functions.{coalesce, col, lit}
     val baseV = latestVersion
     val base = snapshot(baseV)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = base.schema
     val candidates = StatsPruning.prune(base.files,
       prunablePredicates(cond, schema))
     if (candidates.isEmpty) return 0L
@@ -1602,18 +1561,11 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
         col(SnapshotTable.MetaPos).as("pos"))
     val staged = stageDeleteEntries(entries)
     if (staged.isEmpty) return 0L
-    commitWithRetry(
-      cur => {
-        val live = cur.files.map(_.path).toSet
-        if (!scanned.forall(live))
-          throw new java.util.ConcurrentModificationException(
-            s"files scanned by a position delete on $location were " +
-              "rewritten concurrently — the recorded positions name rows " +
-              "that moved")
-        cur.files
-      },
-      cur => cur.schemaJson, "delete",
-      nextDeleteFiles = cur => cur.deleteFiles ++ staged)
+    commit("delete") { b =>
+      requireLive(b, scanned, "position delete",
+        " — the recorded positions name rows that moved")
+      b.copy(deleteFiles = b.deleteFiles ++ staged)
+    }
     staged.map(_.rows).sum
   }
 
@@ -1627,8 +1579,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     import org.apache.spark.sql.functions.col
     val baseV = latestVersion
     val base = snapshot(baseV)
-    val schema = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = base.schema
     val entries = readWithDeletes(base.files, schema, base.renames,
         base.deleteFiles, base.eqDeleteFiles, withRowMeta = true)
       .join(updates.select(keyCols.map(col): _*), keyCols, "left_semi")
@@ -1636,17 +1587,12 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
         col(SnapshotTable.MetaPos).as("pos"))
     val stagedDeletes = stageDeleteEntries(entries)
     val stagedData = stage(updates, partitionCols)
-    commitWithRetry(
-      cur => {
-        if (cur.version != baseV)
-          throw new java.util.ConcurrentModificationException(
-            s"table $location moved v$baseV -> v${cur.version} during " +
-              "merge-on-read MERGE")
-        cur.files ++ stagedData
-      },
-      cur => SnapshotTable.unionSchema(cur.schemaJson, updates.schema),
-      "merge",
-      nextDeleteFiles = cur => cur.deleteFiles ++ stagedDeletes)
+    commit("merge") { b =>
+      requireUnmoved(b, baseV, "merge-on-read MERGE")
+      b.copy(files = b.files ++ stagedData,
+        schemaJson = SnapshotTable.unionSchema(b, updates.schema),
+        deleteFiles = b.deleteFiles ++ stagedDeletes)
+    }
   }
 
   /** EQUALITY delete (Iceberg v2's second merge-on-read flavor): record
@@ -1669,9 +1615,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val base = snapshot(latestVersion)
     val staged = stageEqDeleteEntries(keys, base)
     if (staged.isEmpty) return 0L
-    commitWithRetry(cur => cur.files, cur => cur.schemaJson, "delete",
-      nextEqDeleteFiles = (cur, v) =>
-        cur.eqDeleteFiles ++ staged.map(_.copy(atVersion = v)))
+    commit("delete")(b => b.copy(eqDeleteFiles = b.eqDeleteFiles ++ staged))
     maybeAutoFold()
     staged.map(_.rows).sum
   }
@@ -1697,12 +1641,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val stagedDeletes = stageEqDeleteEntries(
       updates.select(keyCols.map(col): _*), base)
     val stagedData = stage(updates, partitionCols)
-    val v = commitWithRetry(
-      cur => cur.files ++ stagedData,
-      cur => SnapshotTable.unionSchema(cur.schemaJson, updates.schema),
-      operation,
-      nextEqDeleteFiles = (cur, v) =>
-        cur.eqDeleteFiles ++ stagedDeletes.map(_.copy(atVersion = v)))
+    val v = commit(operation)(b => b.copy(files = b.files ++ stagedData,
+      schemaJson = SnapshotTable.unionSchema(b, updates.schema),
+      eqDeleteFiles = b.eqDeleteFiles ++ stagedDeletes))
     maybeAutoFold()
     v
   }
@@ -1745,8 +1686,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val base = snapshot(latestVersion)
     val eqDels = base.eqDeleteFiles
     if (eqDels.isEmpty) return -1
-    val schema = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = base.schema
     // per delete file: [min,max] per key column + a null-key flag; the
     // delete files are small key-only parquet, so this is one tiny job
     // each, and the auto-fold bound keeps their count small by contract
@@ -1784,35 +1724,21 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val staged =
       if (affected.isEmpty) Seq.empty
       else stage(readSnapshotFiles(base, affected, schema), base.partitionCols)
-    commitWithRetry(
-      cur => {
-        val live = cur.files.map(_.path).toSet
-        if (!affectedSet.subsetOf(live))
-          throw new java.util.ConcurrentModificationException(
-            s"fold_eq_deletes inputs at $location were rewritten concurrently")
-        // a delete committed since the fold read started would be cleared
-        // WITHOUT its rows removed — abort (same rule as compact)
-        if (cur.deleteFiles.map(_.path) != base.deleteFiles.map(_.path))
-          throw new java.util.ConcurrentModificationException(
-            s"position deletes landed on $location during fold_eq_deletes")
-        if (cur.eqDeleteFiles.map(_.path) != base.eqDeleteFiles.map(_.path))
-          throw new java.util.ConcurrentModificationException(
-            s"equality deletes landed on $location during fold_eq_deletes")
-        cur.files.filterNot(f => affectedSet(f.path)) ++ staged
-      },
-      cur => cur.schemaJson,
-      "fold_eq_deletes",
-      nextEqDeleteFiles = (_, _) => Seq.empty)
+    commit("fold_eq_deletes") { b =>
+      requireLive(b, affectedSet, "fold_eq_deletes")
+      requireLedgers(b, base, "fold_eq_deletes")
+      b.copy(files = b.files.filterNot(f => affectedSet(f.path)) ++ staged,
+        eqDeleteFiles = Seq.empty)
+    }
   }
 
   /** Write the DISTINCT key tuples of `keys` (cast to the declared column
     * types) as one sorted parquet equality-delete file under `data/`;
-    * `atVersion` is stamped by the caller's commit lambda. */
+    * `atVersion` is left unstamped for the commit to stamp. */
   private def stageEqDeleteEntries(keys: DataFrame,
       base: SnapshotTable.Snapshot): Seq[SnapshotTable.EqDeleteFile] = {
     import org.apache.spark.sql.functions.col
-    val schema = org.apache.spark.sql.types.DataType.fromJson(base.schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = base.schema
     val keyCols = keys.columns.toSeq
     require(keyCols.nonEmpty, "equality delete needs at least one key column")
     val typed = keyCols.map { k =>
@@ -1898,15 +1824,12 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       require(v.trim.matches("\\d+") && v.trim.toInt >= 1,
         s"${SnapshotTable.MaxEqDeleteFiles} must be a positive integer, got '$v'"))
     set.get(SnapshotTable.SortOrder).foreach { v =>
-      val declared = org.apache.spark.sql.types.DataType
-        .fromJson(snapshot(latestVersion).schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
+      val declared = snapshot(latestVersion).schema.fieldNames
       v.split(",").map(_.trim).filter(_.nonEmpty).foreach(c =>
         require(declared.exists(_.equalsIgnoreCase(c)),
           s"${SnapshotTable.SortOrder}: unknown column $c"))
     }
-    commitWithRetry(b => b.files, b => b.schemaJson, "alter",
-      nextProperties = b => (b.properties ++ set) -- unset)
+    commit("alter")(b => b.copy(properties = (b.properties ++ set) -- unset))
   }
 
   /** Expire all but the last `keepLast` snapshots and delete data files no
@@ -2307,27 +2230,21 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       stagedDir: java.nio.file.Path, operation: String,
       replacedPaths: Option[Set[String]] = None): Int = {
     val moved = moveIntoData(parquetFilesIn(stagedDir))
-    val schema = org.apache.spark.sql.types.DataType
-      .fromJson(snapshot(baseVersion).schemaJson)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    val files = manifestEntries(moved, schema, Seq.empty, baseVersion)
-    commitWithRetry(
-      base => {
-        if (base.version != baseVersion)
-          throw new java.util.ConcurrentModificationException(
-            s"table $location moved v$baseVersion -> v${base.version} during row-level $operation")
-        // None = full replace; Some(paths) = only the scanned (rewritten)
-        // files are swapped out, files the scan skipped survive untouched
-        replacedPaths match {
-          case Some(replaced) => base.files.filterNot(f => replaced(f.path)) ++ files
-          case None => files
-        }
-      }, base => base.schemaJson, operation,
-      // partial rewrite: surviving files' delete entries stay live
-      // (rewritten files' entries go stale-harmless — their paths left
-      // the list); full replace starts a clean ledger
-      nextDeleteFiles =
-        base => if (replacedPaths.isDefined) base.deleteFiles else Seq.empty)
+    val files = manifestEntries(moved, snapshot(baseVersion).schema, Seq.empty,
+      baseVersion)
+    commit(operation) { b =>
+      requireUnmoved(b, baseVersion, s"row-level $operation")
+      // None = full replace, which starts a clean position ledger;
+      // Some(paths) = only the scanned (rewritten) files are swapped out,
+      // files the scan skipped survive untouched with their delete
+      // entries live (rewritten files' entries go stale-harmless — their
+      // paths left the list)
+      replacedPaths match {
+        case Some(replaced) =>
+          b.copy(files = b.files.filterNot(f => replaced(f.path)) ++ files)
+        case None => b.copy(files = files, deleteFiles = Seq.empty)
+      }
+    }
   }
 
   /** True if any snapshot was committed with `operation` — the replay
@@ -2339,15 +2256,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * epoch write): rename them into `data/`, collect footer stats, commit
     * as an append tagged `operation`. Schema union like [[append]]. */
   private[table] def appendStagedFiles(stagedPaths: Seq[java.nio.file.Path],
-      schema: org.apache.spark.sql.types.StructType, operation: String): Int = {
-    val moved = moveIntoData(stagedPaths)
-    val files = manifestEntries(moved, schema, Seq.empty, latestVersion)
-    commitWithRetry(
-      base => base.files ++ files,
-      base => if (base.version < 0) schema.json
-              else SnapshotTable.unionSchema(base.schemaJson, schema),
-      operation)
-  }
+      schema: org.apache.spark.sql.types.StructType, operation: String): Int =
+    commitStaged(stagedPaths, schema, operation)((b, files) =>
+      b.copy(files = b.files ++ files,
+        schemaJson = SnapshotTable.unionSchema(b, schema)))
 
   /** Replace the table's ENTIRE content with parquet files an external
     * writer staged (the DSv2 streaming COMPLETE-mode epoch write: each
@@ -2356,11 +2268,20 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * + footer-stats path as [[appendStagedFiles]]; an empty staged set is
     * a legitimate complete-mode result and commits an empty snapshot. */
   private[table] def replaceStagedFiles(stagedPaths: Seq[java.nio.file.Path],
-      schema: org.apache.spark.sql.types.StructType, operation: String): Int = {
+      schema: org.apache.spark.sql.types.StructType, operation: String): Int =
+    commitStaged(stagedPaths, schema, operation)((b, files) =>
+      b.copy(files = files, schemaJson = schema.json, deleteFiles = Seq.empty))
+
+  /** The body both staged-file commits share: rename the external
+    * writer's files into `data/`, collect their footer stats, and commit
+    * `edit` with their manifest entries. */
+  private def commitStaged(stagedPaths: Seq[java.nio.file.Path],
+      schema: org.apache.spark.sql.types.StructType, operation: String)(
+      edit: (SnapshotTable.Snapshot, Seq[SnapshotTable.DataFile]) =>
+        SnapshotTable.Snapshot): Int = {
     val moved = moveIntoData(stagedPaths)
     val files = manifestEntries(moved, schema, Seq.empty, latestVersion)
-    commitWithRetry(_ => files, _ => schema.json, operation,
-      nextDeleteFiles = _ => Seq.empty)
+    commit(operation)(edit(_, files))
   }
 
   /** Where manifest chunks live — under the MAIN snapshot dir for branch
@@ -2414,70 +2335,93 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     (reusedRefs.result() ++ newRefs, reusedEntries.result() ++ leftovers)
   }
 
-  private def commitWithRetry(
-      nextFiles: SnapshotTable.Snapshot => Seq[SnapshotTable.DataFile],
-      nextSchema: SnapshotTable.Snapshot => String,
-      operation: String,
-      partitionColsIfNew: Seq[String] = Seq.empty,
-      attempts: Int = 20,
-      nextRenames: (SnapshotTable.Snapshot, Int) => Seq[SnapshotTable.Rename] =
-        (b, _) => b.renames,
-      nextProperties: SnapshotTable.Snapshot => Map[String, String] =
-        b => b.properties,
-      // position-delete files carry forward by default (appends/ALTERs
-      // never invalidate them); whole-content replacements clear them and
-      // MOR commits extend them
-      nextDeleteFiles: SnapshotTable.Snapshot => Seq[SnapshotTable.DeleteFile] =
-        b => b.deleteFiles,
-      // the partition spec carries forward by default; only
-      // setPartitionSpec replaces it
-      nextPartitionCols: SnapshotTable.Snapshot => Seq[String] =
-        b => b.partitionCols,
-      // equality-delete files carry forward like position deletes;
-      // whole-content replacements clear them, upserts extend them (the
-      // Int is the version being committed — atVersion is stamped per
-      // retry so a rebased commit scopes to its real sequence position)
-      nextEqDeleteFiles: (SnapshotTable.Snapshot, Int) => Seq[SnapshotTable.EqDeleteFile] =
-        (b, _) => b.eqDeleteFiles): Int = {
-    var tries = 0
-    while (true) {
+  /** THE commit: `edit` turns the latest snapshot into the next one
+    * (callers write `base.copy(...)`, so every field they leave alone
+    * carries forward), and the result is published as the next version.
+    * A lost publish re-reads the new head and runs `edit` again on top of
+    * it (optimistic rebase); an edit aborts instead by calling one of the
+    * conflict rules ([[requireUnmoved]], [[requireLive]],
+    * [[requireLedgers]]). Before the empty table's first commit the base
+    * is version -1 with an empty schema.
+    *
+    * The commit alone stamps what a commit adds: version, timestamp,
+    * operation and manifest layout ([[chunkLayout]]), and the committed
+    * version into every entry that arrives unstamped — a new data file's
+    * `addedAt`, an equality delete's `atVersion`, a rename's
+    * `atVersion`. Stamps are re-made per attempt, so a rebased commit
+    * scopes its equality deletes to the version that actually wins.
+    * Entries that already carry a stamp keep it (rollback restores old
+    * files WITH their old sequence position, so restored equality deletes
+    * keep applying to them); a data file carried from the base keeps even
+    * a legacy -1. */
+  private def commit(operation: String)(
+      edit: SnapshotTable.Snapshot => SnapshotTable.Snapshot): Int = {
+    var attempts = 0
+    while (attempts < SnapshotTable.CommitAttempts) {
+      attempts += 1
       val baseV = latestVersion
       val base =
         if (baseV >= 0) snapshot(baseV)
-        else SnapshotTable.Snapshot(-1, 0L, "", Seq.empty, "none", partitionColsIfNew)
-      // central addedAt stamping: every UNSTAMPED file entering the
-      // manifest at this commit gets the committed version as its
-      // sequence position — the ordering equality deletes scope on.
-      // Re-stamped per retry: a rebased commit's files are "added" at the
-      // version that actually wins. Files that already carry a stamp keep
-      // it even when absent from base (rollback restores old files WITH
-      // their old sequence position, so restored equality deletes keep
-      // applying to them).
+        else SnapshotTable.Snapshot(-1, 0L, "", Seq.empty, "none")
+      val v = baseV + 1
+      val next = edit(base)
+      def stamp(at: Int): Int = if (at < 0) v else at
       val basePaths = base.files.map(_.path).toSet
-      val stamped = nextFiles(base).map(f =>
-        if (f.addedAt < 0 && !basePaths(f.path)) f.copy(addedAt = baseV + 1)
-        else f)
-      val props = nextProperties(base)
-      val (refs, ordered) = chunkLayout(base, stamped, props)
-      val snap = SnapshotTable.Snapshot(
-        baseV + 1, System.currentTimeMillis(), nextSchema(base),
-        ordered, operation, nextPartitionCols(base),
-        nextRenames(base, baseV + 1), props,
-        nextDeleteFiles(base), nextEqDeleteFiles(base, baseV + 1), refs)
+      val files = next.files.map(f =>
+        if (basePaths(f.path)) f else f.copy(addedAt = stamp(f.addedAt)))
+      val (refs, ordered) = chunkLayout(base, files, next.properties)
+      val snap = next.copy(version = v,
+        timestampMs = System.currentTimeMillis(), files = ordered,
+        operation = operation,
+        renames = next.renames.map(r => r.copy(atVersion = stamp(r.atVersion))),
+        eqDeleteFiles = next.eqDeleteFiles.map(d =>
+          d.copy(atVersion = stamp(d.atVersion))),
+        manifestRefs = refs)
       Files.createDirectories(snapDir)
       // the commit point: atomic publish-if-absent of the version file
       // ([[CommitPrimitive]] — hard link here, conditional PUT on S3)
-      val dest = snapDir.resolve(f"v${snap.version}%05d.json")
+      val dest = snapDir.resolve(f"v$v%05d.json")
       if (CommitPrimitive.forDest(dest).publish(
           dest, SnapshotTable.renderSnapshot(snap)))
-        return snap.version
-      tries += 1
-      if (tries >= attempts)
-        throw new IllegalStateException(
-          s"commit to $location lost $attempts races, giving up")
-      // retry on top of the newly committed snapshot
+        return v
     }
-    -1 // unreachable
+    throw new IllegalStateException(s"commit to $location lost " +
+      s"${SnapshotTable.CommitAttempts} races, giving up")
+  }
+
+  /** Conflict rule: the base has not moved past `validated`, the version
+    * the caller read and validated against. Operations that commit a
+    * state derived from that one snapshot (copy-on-write rewrites, ALTER,
+    * probe-based MERGE, fast_forward) must never rebase. */
+  private def requireUnmoved(base: SnapshotTable.Snapshot, validated: Int,
+      during: String, remedy: String = ""): Unit =
+    if (base.version != validated)
+      throw new java.util.ConcurrentModificationException(
+        s"table $location moved v$validated -> v${base.version} during " +
+          during + remedy)
+
+  /** Conflict rule: every file the operation scanned is still live — a
+    * concurrent rewrite moved the rows it read. */
+  private def requireLive(base: SnapshotTable.Snapshot, scanned: Set[String],
+      op: String, remedy: String = ""): Unit = {
+    val live = base.files.map(_.path).toSet
+    if (!scanned.forall(live))
+      throw new java.util.ConcurrentModificationException(
+        s"$op inputs at $location were rewritten concurrently" + remedy)
+  }
+
+  /** Conflict rule: both delete ledgers are as the operation read them in
+    * `read` — a rewrite that folds the ledger would otherwise clear a
+    * concurrent delete WITHOUT its rows removed. */
+  private def requireLedgers(base: SnapshotTable.Snapshot,
+      read: SnapshotTable.Snapshot, op: String): Unit = {
+    val landed = Seq(
+      "position" -> (base.deleteFiles.map(_.path) != read.deleteFiles.map(_.path)),
+      "equality" -> (base.eqDeleteFiles.map(_.path) != read.eqDeleteFiles.map(_.path)))
+      .collect { case (flavor, true) => flavor }
+    if (landed.nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"${landed.mkString(" and ")} deletes landed on $location during $op")
   }
 }
 
@@ -2518,6 +2462,10 @@ object SnapshotTable {
       schemaVersion: Int = -1,
       ndv: Map[String, String] = Map.empty,
       addedAt: Int = -1)
+
+  /** The stamp of an entry not yet committed (`addedAt` / `atVersion`):
+    * [[SnapshotTable.commit]] writes the committed version into it. */
+  private[table] val Unstamped = -1
 
   /** One RENAME COLUMN event: at snapshot `atVersion`, `oldName` became
     * `newName`. Files with schemaVersion < atVersion store `oldName`. */
@@ -2581,7 +2529,13 @@ object SnapshotTable {
       properties: Map[String, String] = Map.empty,
       deleteFiles: Seq[DeleteFile] = Seq.empty,
       eqDeleteFiles: Seq[EqDeleteFile] = Seq.empty,
-      manifestRefs: Seq[String] = Seq.empty)
+      manifestRefs: Seq[String] = Seq.empty) {
+    /** The declared schema, decoded once per snapshot instance (snapshots
+      * are memoized per table, so once per version). */
+    lazy val schema: org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.DataType.fromJson(schemaJson)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+  }
 
   /** Metadata column aliases the merge-on-read run through the V1 parquet
     * reader uses to carry each row's provenance for the delete anti-join. */
@@ -2637,6 +2591,9 @@ object SnapshotTable {
   /** Max file entries per manifest chunk (bounds chunk parse cost). */
   val ChunkEntries = 8192
 
+  /** Publish attempts before a commit gives up ([[SnapshotTable.commit]]). */
+  private val CommitAttempts = 20
+
   /** Retention-policy table properties (Iceberg's names): expiration may
     * never collect below these floors, no matter what a maintenance job
     * passes — the guard that keeps routine `expire_snapshots` from
@@ -2669,8 +2626,7 @@ object SnapshotTable {
     * renamed table returns to the plain fast paths after one compact. */
   private[table] def needsRenameMapping(snap: Snapshot): Boolean =
     snap.renames.nonEmpty && {
-      val declared = org.apache.spark.sql.types.DataType.fromJson(snap.schemaJson)
-        .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
+      val declared = snap.schema.fieldNames.toSeq
       snap.files.exists(f =>
         fileLocalNames(declared, f.schemaVersion, snap.renames) != declared)
     }
@@ -2918,15 +2874,17 @@ object SnapshotTable {
   }
 
   /** Union of the committed table schema and an appended frame's schema:
-    * existing fields keep their position and type; new fields append. */
-  private[table] def unionSchema(baseJson: String,
-      df: org.apache.spark.sql.types.StructType): String = {
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val base = DataType.fromJson(baseJson).asInstanceOf[StructType]
-    val known = base.fieldNames.toSet
-    val extra = df.fields.filterNot(f => known.contains(f.name))
-    if (extra.isEmpty) baseJson else StructType(base.fields ++ extra).json
-  }
+    * existing fields keep their position and type; new fields append.
+    * Before the table's first commit it is the frame's schema. */
+  private[table] def unionSchema(base: Snapshot,
+      df: org.apache.spark.sql.types.StructType): String =
+    if (base.version < 0) df.json
+    else {
+      val known = base.schema.fieldNames.toSet
+      val extra = df.fields.filterNot(f => known.contains(f.name))
+      if (extra.isEmpty) base.schemaJson
+      else org.apache.spark.sql.types.StructType(base.schema.fields ++ extra).json
+    }
 
   private val SnapName = "v([0-9]{5})\\.json".r
 

@@ -141,9 +141,7 @@ private[table] class GraftMicroBatchStream(
     val s = t.snapshot(v)
     if (s.operation != "alter" || prev < 0) return
     val p = t.snapshot(prev)
-    import org.apache.spark.sql.types.{DataType, StructType}
-    val ps = DataType.fromJson(p.schemaJson).asInstanceOf[StructType]
-    val ns = DataType.fromJson(s.schemaJson).asInstanceOf[StructType]
+    val (ps, ns) = (p.schema, s.schema)
     val renamed = s.renames.size > p.renames.size
     val columnAddingOnly = !renamed && ns.fields.length >= ps.fields.length &&
       ns.fields.take(ps.fields.length).zip(ps.fields).forall {

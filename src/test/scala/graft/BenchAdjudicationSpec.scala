@@ -74,6 +74,9 @@ class BenchAdjudicationSpec extends AnyFunSuite {
     // construction — their plan_ms measures job execution, not planning
     assert(Bench.constructionActions("q122_bpe_tokenize"))
     assert(Bench.constructionActions("q131_vocab_report"))
+    // q56's PPJoin probes for hot tokens (a Spark job) while building its
+    // frame (ADVICE r22)
+    assert(Bench.constructionActions("q56_ngram_jaccard"))
     assert(!Bench.constructionActions("q90_rank_suite"))
   }
 
