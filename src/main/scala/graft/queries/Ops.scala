@@ -209,7 +209,7 @@ object Ops {
       .writeTo(s"graft.db.$name").append()
     // layout sanity: a point predicate prunes to a strict subset
     val t = SnapshotTable.load(s, s"$wh/db/$name")
-    val files = t.snapshot(t.latestVersion).files.filter(_.rows > 0)
+    val files = t.head.files.filter(_.rows > 0)
     val kept = graft.table.StatsPruning.prune(files,
       Seq(org.apache.spark.sql.sources.EqualTo("user_id", 7L)))
     require(files.size >= 4 && kept.size < files.size,
@@ -644,7 +644,7 @@ object Ops {
     val t = graft.table.SnapshotTable.load(s, s"$wh/db/$name")
     require(t.partitionCols == Seq("days(ts)", "bucket(8,user_id)"),
       s"q55b: expected the evolved spec, got ${t.partitionCols}")
-    val snap = t.snapshot(t.latestVersion)
+    val snap = t.head
     require(snap.files.exists(f => !f.stats.contains("bucket(8,user_id)")) &&
       snap.files.exists(f => f.stats.contains("bucket(8,user_id)")),
       "q55b: expected both partition-spec generations in the manifest")

@@ -306,7 +306,7 @@ object Streams {
       val cat = Streams.warehouseCatalogName(wh)
       s2.conf.set(s"spark.sql.catalog.$cat", classOf[GraftCatalog].getName)
       s2.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      if (!new java.io.File(s"$loc/_snapshots").isDirectory)
+      if (!SnapshotTable.exists(loc))
         s2.sql(s"CREATE TABLE $cat.db.`$name` (keep_doc_id BIGINT, content_hash STRING)")
       val firstSeen = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
@@ -432,13 +432,14 @@ object Streams {
     def refresh(sourceLoc: String): DataFrame = {
       val src = SnapshotTable.load(spark, sourceLoc)
       val head = src.latestVersion
-      if (!new java.io.File(s"$location/_snapshots").isDirectory) {
+      val found = SnapshotTable.find(spark, location)
+      if (found.isEmpty) {
         // watermark rides the creating commit — one snapshot, not two
         val t = SnapshotTable.create(spark, location, aggregate(src.read()),
           partitionCols, properties = Map(WatermarkProp -> head.toString))
         return t.read()
       }
-      val mv = SnapshotTable.load(spark, location)
+      val mv = found.get
       val last = mv.properties.get(WatermarkProp).map(_.trim.toInt).getOrElse(-1)
       if (head > last) {
         // changedKeyRows, not changes(): the refresh recomputes touched
@@ -508,7 +509,8 @@ object Streams {
               sort_array(collect_set(col("event_type"))).as("event_types"))
             .persist() // read twice: touched-id collect + the merge join
           try {
-            if (new java.io.File(s"$location/_snapshots").isDirectory) {
+            val mv = SnapshotTable.find(sb, location)
+            if (mv.isDefined) {
               // touched group keys, bounded by the batch's user
               // cardinality — the replace predicate AND the merge scope.
               // A very wide batch (first catch-up batch touching most
@@ -519,7 +521,7 @@ object Streams {
               val touched = delta.select("user_id")
                 .limit(MaxTouchedIn + 1).collect().map(_.get(0))
               if (touched.nonEmpty) {
-                val t = SnapshotTable.load(sb, location)
+                val t = mv.get
                 // NULL-SAFE replace scope: a plain IN evaluates to NULL
                 // for the MV's null-keyed row — excluded from the merge
                 // read yet NOT replaced by replaceWhere (only cond=TRUE
@@ -598,21 +600,11 @@ object Streams {
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val tag = s"stream-batch-$batchId"
-          val exists = new java.io.File(s"$tableLoc/_snapshots").isDirectory
-          val replayed = exists && {
-            val t = SnapshotTable.load(batch.sparkSession, tableLoc)
-            t.versions.map(v => t.snapshot(v).operation).contains(tag)
-          }
-          if (!replayed) {
-            if (exists) SnapshotTable.load(batch.sparkSession, tableLoc).append(batch, tag)
-            else {
-              // first batch creates the table with the tagged snapshot
-              val t = new java.io.File(tableLoc)
-              t.mkdirs()
-              SnapshotTable.createEmpty(batch.sparkSession, tableLoc, batch.schema)
-              SnapshotTable.load(batch.sparkSession, tableLoc).append(batch, tag)
-            }
-          }
+          // the first batch creates the table, then commits the tagged
+          // snapshot like every later one
+          val t = SnapshotTable.find(batch.sparkSession, tableLoc).getOrElse(
+            SnapshotTable.createEmpty(batch.sparkSession, tableLoc, batch.schema))
+          if (!t.hasOperation(tag)) t.append(batch, tag)
           ()
         }
         .start()
@@ -658,12 +650,8 @@ object Streams {
           // ids restarting at 0) must not have its early batches skipped
           // as replays of the first stream's commits
           val tag = s"upsert-$checkpointTag-batch-$batchId"
-          val exists = new java.io.File(s"$tableLoc/_snapshots").isDirectory
-          if (!exists) {
-            new java.io.File(tableLoc).mkdirs()
-            SnapshotTable.createEmpty(batch.sparkSession, tableLoc, batch.schema)
-          }
-          val t = SnapshotTable.load(batch.sparkSession, tableLoc)
+          val t = SnapshotTable.find(batch.sparkSession, tableLoc).getOrElse(
+            SnapshotTable.createEmpty(batch.sparkSession, tableLoc, batch.schema))
           // within-batch key dedup: an upsert's equality delete never
           // applies to its own files, so two same-key rows in one epoch
           // would BOTH land — keep one per key (Flink's upsert sink keeps
@@ -687,9 +675,10 @@ object Streams {
       compute: => DataFrame): DataFrame = {
     import graft.table.SnapshotTable
     val df = compute
-    if (new java.io.File(s"$mvDir/_snapshots").isDirectory)
-      SnapshotTable.load(spark, mvDir).overwrite(df)
-    else SnapshotTable.create(spark, mvDir, df)
-    SnapshotTable.load(spark, mvDir).read()
+    val t = SnapshotTable.find(spark, mvDir) match {
+      case Some(t) => t.overwrite(df); t
+      case None => SnapshotTable.create(spark, mvDir, df)
+    }
+    t.read()
   }
 }

@@ -243,11 +243,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   private def spark: SparkSession = SparkSession.active
 
-  private def open(ident: Identifier): SnapshotTable = {
-    if (!new java.io.File(s"${location(ident)}/_snapshots").isDirectory)
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    SnapshotTable.load(spark, location(ident))
-  }
+  private def open(ident: Identifier): SnapshotTable =
+    SnapshotTable.find(spark, location(ident)).getOrElse(
+      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
 
   private def parquetTable(ident: Identifier, snap: SnapshotTable.Snapshot): Table =
     new GraftTable(
@@ -261,15 +259,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (ident.namespace().length >= 2) {
       val parent = Identifier.of(
         ident.namespace().dropRight(1), ident.namespace().last)
-      if (new java.io.File(s"${location(parent)}/_snapshots").isDirectory) {
-        val meta = MetadataTables.forKind(
+      val meta = SnapshotTable.find(spark, location(parent)).flatMap(t =>
+        MetadataTables.forKind(
           s"$catalogName.${parent.namespace().mkString(".")}.${parent.name()}",
-          open(parent), ident.name())
-        if (meta.isDefined) return meta.get
-      }
+          t, ident.name()))
+      if (meta.isDefined) return meta.get
     }
-    val t = open(ident)
-    parquetTable(ident, t.snapshot(t.latestVersion))
+    parquetTable(ident, open(ident).head)
   }
 
   /** `VERSION AS OF v` — a numeric string pins that snapshot version; any
@@ -286,24 +282,19 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** `TIMESTAMP AS OF ts` — Spark passes microseconds since epoch. */
-  override def loadTable(ident: Identifier, timestamp: Long): Table = {
-    val t = open(ident)
-    val ms = timestamp / 1000L
-    val vs = t.versions.map(t.snapshot).filter(_.timestampMs <= ms)
-    if (vs.isEmpty)
-      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)
-    parquetTable(ident, vs.maxBy(_.version))
-  }
+  override def loadTable(ident: Identifier, timestamp: Long): Table =
+    parquetTable(ident, open(ident).snapshotAsOf(timestamp / 1000L).getOrElse(
+      throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident)))
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val dir = new java.io.File((Seq(warehouse) ++ namespace).mkString("/"))
     Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => new java.io.File(f, "_snapshots").isDirectory)
+      .filter(f => SnapshotTable.exists(f.getPath))
       .map(f => Identifier.of(namespace, f.getName))
   }
 
   override def tableExists(ident: Identifier): Boolean =
-    new java.io.File(s"${location(ident)}/_snapshots").isDirectory
+    SnapshotTable.exists(location(ident))
 
   /** `CREATE TABLE … PARTITIONED BY (col, …)` — identity transforms (the
     * reference's fact table is day-partitioned by definition, reference
@@ -367,8 +358,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     if (tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
-    val t = SnapshotTable.createEmpty(spark, location(ident), schema, pcols)
-    parquetTable(ident, t.snapshot(t.latestVersion))
+    val t = SnapshotTable.openUnchecked(spark, location(ident))
+    parquetTable(ident, t.snapshot(t.commitEmpty(schema.json, pcols)))
   }
 
   /** `ALTER TABLE … ADD COLUMN(S) / RENAME COLUMN / DROP COLUMN(S)`
@@ -388,15 +379,15 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     // go, and commit ONCE at the end: a multi-change ALTER (e.g. ADD
     // COLUMNS (x, y) where y is invalid) either fully applies or commits
     // nothing — never a half-altered table
-    val psrc = t.partitionCols.map(PartitionFields.parse).map(_.source)
+    val base = t.head // every guard below reads this snapshot
+    val psrc = base.partitionCols.map(PartitionFields.parse).map(_.source)
     val historical = t.historicalNames
-    val validatedAt = t.latestVersion // every guard below reads this snapshot
     def single(fieldNames: Array[String], what: String): String = {
       require(fieldNames.length == 1,
         s"nested column $what not supported: ${fieldNames.mkString(".")}")
       fieldNames(0)
     }
-    var schema = t.snapshot(t.latestVersion).schema
+    var schema = base.schema
     var renamed = Seq.empty[(String, String)]
     var propSet = Map.empty[String, String]
     var propUnset = Set.empty[String]
@@ -466,8 +457,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case other => throw new UnsupportedOperationException(
         s"unsupported table change: $other")
     }
-    t.commitEvolution(schema.json, renamed, propSet, propUnset, validatedAt)
-    parquetTable(ident, t.snapshot(t.latestVersion))
+    parquetTable(ident, t.snapshot(
+      t.commitEvolution(schema.json, renamed, propSet, propUnset, base.version)))
   }
 
   override def dropTable(ident: Identifier): Boolean = {
@@ -477,33 +468,26 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   /** ALTER TABLE … RENAME TO: move the table directory, then rewrite the
-    * manifests' absolute data-file paths to the new prefix (metadata-only
+    * absolute paths in every metadata document — main's and each branch's
+    * versions and the manifest chunks — to the new prefix (metadata-only
     * — no data is copied; the dir move is one filesystem rename). */
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
     import java.nio.file.{Files, Paths}
     val from = location(oldIdent)
     val to = location(newIdent)
-    if (!new java.io.File(s"$from/_snapshots").isDirectory)
+    if (!tableExists(oldIdent))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(oldIdent)
-    require(!new java.io.File(to).exists(), s"rename target exists: $to")
+    require(!Files.exists(Paths.get(to)), s"rename target exists: $to")
     Files.createDirectories(Paths.get(to).getParent)
     Files.move(Paths.get(from), Paths.get(to))
-    val snaps = Paths.get(to, "_snapshots")
-    import scala.jdk.CollectionConverters._
-    scala.util.Using.resource(Files.list(snaps))(
-      _.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".json"))
-        .toList).foreach { p =>
-        val rewritten = Files.readString(p).replace(s"$from/", s"$to/")
-        Files.writeString(p, rewritten)
-      }
+    SnapshotLog.rewritePaths(to, s"$from/", s"$to/")
   }
 
   // ------------------------------------------------- SupportsNamespaces
   override def listNamespaces(): Array[Array[String]] = {
     val dir = new java.io.File(warehouse)
     Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && !new java.io.File(f, "_snapshots").isDirectory)
+      .filter(f => f.isDirectory && !SnapshotTable.exists(f.getPath))
       .map(f => Array(f.getName))
   }
 

@@ -101,7 +101,7 @@ object MetadataTables {
         // backslashes are legal in them, so the JSON is built through the
         // mapper rather than interpolation
         val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-        val snap = t.snapshot(t.latestVersion)
+        val snap = t.head
         val rows = snap.files.map { f =>
           val root = mapper.createObjectNode()
           f.stats.toSeq.sortBy(_._1).foreach { case (c, s) =>
@@ -132,7 +132,7 @@ object MetadataTables {
         // An UNPARTITIONED table still answers with a single whole-table
         // rollup row (Iceberg's shape), so storage tooling needn't
         // special-case it.
-        val snap = t.snapshot(t.latestVersion)
+        val snap = t.head
         val fields = snap.partitionCols.map(PartitionFields.parse)
         val rows = snap.files
           .groupBy { f =>
@@ -167,7 +167,7 @@ object MetadataTables {
         // a V1Scan relation plans [[SnapshotTable.changes]]'s own
         // distributed DataFrame (per-version changed-file scans +
         // scoped semi-joins) when the query executes
-        val dataSchema = t.snapshot(t.latestVersion).schema
+        val dataSchema = t.head.schema
         val cdcSchema = StructType(dataSchema.fields ++ Seq(
           StructField("_change_type", StringType, nullable = false),
           StructField("_commit_version", IntegerType, nullable = false),
@@ -177,7 +177,7 @@ object MetadataTables {
         // `SELECT * FROM cat.db.t.deletes` — the live merge-on-read
         // position-delete ledger (empty once compaction folds it)
         import org.apache.spark.unsafe.types.UTF8String
-        val rows = t.snapshot(t.latestVersion).deleteFiles.map { d =>
+        val rows = t.head.deleteFiles.map { d =>
           InternalRow(UTF8String.fromString(d.path), d.rows, d.bytes,
             if (d.minPath.isEmpty) null else UTF8String.fromString(d.minPath),
             if (d.maxPath.isEmpty) null else UTF8String.fromString(d.maxPath))
@@ -187,7 +187,7 @@ object MetadataTables {
         // `SELECT * FROM cat.db.t.eq_deletes` — the live equality-delete
         // ledger (empty once compaction folds it)
         import org.apache.spark.unsafe.types.UTF8String
-        val rows = t.snapshot(t.latestVersion).eqDeleteFiles.map { d =>
+        val rows = t.head.eqDeleteFiles.map { d =>
           InternalRow(UTF8String.fromString(d.path), d.rows, d.bytes,
             UTF8String.fromString(d.keyCols.mkString(",")), d.atVersion)
         }
@@ -197,7 +197,7 @@ object MetadataTables {
         // chunk layer (X120): one row per chunk ref of the current
         // snapshot; empty for inline (small-table) snapshots
         import org.apache.spark.unsafe.types.UTF8String
-        val rows = t.snapshot(t.latestVersion).manifestRefs.map { r =>
+        val rows = t.head.manifestRefs.map { r =>
           val entries = SnapshotTable.readChunk(r)
           val size =
             try java.nio.file.Files.size(java.nio.file.Paths.get(r))

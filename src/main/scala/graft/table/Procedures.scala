@@ -82,7 +82,7 @@ object Procedures {
       val v = t.foldEqDeletes()
       val live =
         if (v >= 0) t.snapshot(v).eqDeleteFiles.size
-        else t.snapshot(t.latestVersion).eqDeleteFiles.size
+        else t.head.eqDeleteFiles.size
       resultScan(outSchema, InternalRow(v, live))
     }
   }
@@ -253,7 +253,7 @@ object Procedures {
       val targetLoc = (warehouse +:
         input.getUTF8String(1).toString.split('.').toSeq).mkString("/")
       val t = src.cloneTo(targetLoc)
-      val snap = t.snapshot(t.latestVersion)
+      val snap = t.head
       resultScan(outSchema,
         InternalRow(snap.files.size, snap.files.map(_.rows).sum))
     }
@@ -276,7 +276,7 @@ object Procedures {
       StructField("new_version", IntegerType)))
     override def call(input: InternalRow): util.Iterator[Scan] = {
       val t = open(warehouse, input.getUTF8String(0).toString)
-      val before = t.snapshot(t.latestVersion).files.map(_.path).toSet
+      val before = t.head.files.map(_.path).toSet
       val v = t.addFiles(input.getUTF8String(1).toString,
         checkDuplicateFiles = input.getBoolean(2))
       val added = t.snapshot(v).files.filterNot(f => before(f.path))

@@ -21,10 +21,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *      committed version into every entry that arrives unstamped (a new
   *      data file's `addedAt`, an equality delete's or a rename's
   *      `atVersion`);
-  *   3. serialize to `_snapshots/.tmp-*`;
-  *   4. atomically publish at `_snapshots/v%05d.json` — the commit point,
-  *      isolated behind [[CommitPrimitive]] (POSIX hard link here; S3
-  *      conditional PUT / lock table at cloud scale — see its scaladoc).
+  *   3. serialize the snapshot document;
+  *   4. atomically publish it as the next version of the log — the commit
+  *      point, isolated behind [[CommitPrimitive]] (POSIX hard link here;
+  *      S3 conditional PUT / lock table at cloud scale — see its
+  *      scaladoc). [[SnapshotLog]] is the one owner of the metadata
+  *      layout: a version's document is named by its number zero-padded
+  *      to five digits (`v00042.json`), with more digits past v99,999
+  *      (`v100000.json`), and the number, never the name, orders the log.
   *      A concurrent writer that loses the race observes publish=false,
   *      re-reads the latest snapshot, and re-runs its edit on top of it
   *      (optimistic concurrency). An edit aborts with
@@ -62,13 +66,11 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val ref: Option[String] = None) {
 
   // A branch instance shares the table's data/ directory (its commits
-  // stage files exactly like main's) but keeps its snapshot chain under
-  // _refs/<name>/ — same document format, same commit primitive, so every
-  // ACID property holds per-ref.
-  private def snapDir: Path = ref match {
-    case Some(name) => Paths.get(location, "_refs", name)
-    case None => Paths.get(location, "_snapshots")
-  }
+  // stage files exactly like main's) but keeps its own snapshot chain —
+  // same document format, same commit primitive, so every ACID property
+  // holds per-ref.
+  private val log: SnapshotLog =
+    ref.fold(SnapshotLog.main(location))(SnapshotLog.branch(location, _))
   private def dataDir: Path = Paths.get(location, "data")
 
   private def requireMain(op: String): Unit = require(ref.isEmpty,
@@ -76,36 +78,21 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
 
   // ------------------------------------------------------------ snapshots
 
-  /** Sorted list of committed snapshot versions. NB every directory
-    * stream here and below closes via Using.resource — `Files.list`
-    * holds an OS directory handle until closed, and this method runs on
-    * every commit/read; leaked handles took the test JVM to EMFILE. */
-  def versions: Seq[Int] =
-    if (!Files.isDirectory(snapDir)) Seq.empty
-    else scala.util.Using.resource(Files.list(snapDir))(
-      _.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case SnapshotTable.SnapName(v) => v.toInt }
-        .toSeq).sorted
+  /** Committed snapshot versions, ascending (one directory listing). */
+  def versions: Seq[Int] = log.versions
 
-  def latestVersion: Int = versions.lastOption.getOrElse(-1)
+  def latestVersion: Int = log.headVersion
 
-  // Snapshot documents are IMMUTABLE once published (the commit primitive
-  // is publish-if-absent; expiry deletes version files, never rewrites
-  // them), so parsing memoizes per instance: metadata-heavy paths — a
-  // streaming trigger walking version deltas, history(), commit rebases —
-  // parse each version once instead of once per access.
-  private val snapCache =
-    new java.util.concurrent.ConcurrentHashMap[Int, SnapshotTable.Snapshot]()
+  /** The latest snapshot (one directory listing) — the version -1 empty
+    * base before the first commit. An operation reads it once and works
+    * from that copy; only [[commit]] re-reads it, once per attempt. */
+  def head: SnapshotTable.Snapshot = log.head
 
-  def snapshot(version: Int): SnapshotTable.Snapshot =
-    snapCache.computeIfAbsent(version, v =>
-      SnapshotTable.parseSnapshot(
-        Files.readString(snapDir.resolve(f"v$v%05d.json"))))
+  /** Snapshot `version`, parsed once per instance. */
+  def snapshot(version: Int): SnapshotTable.Snapshot = log.read(version)
 
   /** Partition columns declared at table creation (identity transforms). */
-  def partitionCols: Seq[String] =
-    if (latestVersion >= 0) snapshot(latestVersion).partitionCols else Seq.empty
+  def partitionCols: Seq[String] = head.partitionCols
 
   // ---------------------------------------------------------------- reads
 
@@ -626,11 +613,17 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   /** Time travel by timestamp (`TIMESTAMP AS OF`): latest snapshot whose
     * commit time is <= the requested instant. */
   def readAsOf(timestampMs: Long): DataFrame = {
-    val v = versions.map(snapshot).filter(_.timestampMs <= timestampMs)
-      .map(_.version)
-    require(v.nonEmpty, s"no snapshot at or before $timestampMs")
-    readVersion(v.max)
+    val s = snapshotAsOf(timestampMs)
+    require(s.isDefined, s"no snapshot at or before $timestampMs")
+    readVersion(s.get.version)
   }
+
+  /** The latest snapshot committed at or before `timestampMs`, if any —
+    * the one as-of resolver behind [[readAsOf]] and the catalog's
+    * `TIMESTAMP AS OF`. */
+  def snapshotAsOf(timestampMs: Long): Option[SnapshotTable.Snapshot] =
+    versions.map(snapshot).filter(_.timestampMs <= timestampMs)
+      .maxByOption(_.version)
 
   /** The current snapshot's manifest as a DataFrame (file path, row count,
     * byte size) — the `table#files` metadata-table surface: storage
@@ -639,7 +632,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * `performance_comparison.sql:195-205`). */
   def filesDF(): DataFrame = {
     import spark.implicits._
-    snapshot(latestVersion).files
+    head.files
       .map(f => (f.path, f.rows, f.bytes)).toDF("file_path", "n_rows", "bytes")
   }
 
@@ -732,7 +725,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * validated against; default = the head at entry. */
   def setPartitionSpec(spec: Seq[String], validatedAt: Int = -1): Int = {
     requireMain("ALTER (partition spec)")
-    val base = snapshot(if (validatedAt >= 0) validatedAt else latestVersion)
+    val base = if (validatedAt >= 0) snapshot(validatedAt) else head
     val fields = spec.map(PartitionFields.parse)
     val schema = base.schema
     def colType(c: String): org.apache.spark.sql.types.DataType =
@@ -784,12 +777,12 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * into the renamed column (Iceberg avoids this with field IDs; the
     * name-mapped design refuses instead). */
   def renameColumn(oldName: String, newName: String): Int = {
-    val base = snapshot(latestVersion)
+    val base = head
     val schema = base.schema
     require(schema.fieldNames.contains(oldName), s"no such column: $oldName")
     require(!schema.fieldNames.contains(newName),
       s"column $newName already exists")
-    val psrc = partitionCols.map(PartitionFields.parse).map(_.source)
+    val psrc = base.partitionCols.map(PartitionFields.parse).map(_.source)
     require(!psrc.contains(oldName),
       s"cannot rename partition source column $oldName")
     // live equality deletes name their key columns by the DECLARED name;
@@ -812,10 +805,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * Re-ADDing a dropped name is refused ([[historicalNames]] guard): old
     * files still store values under it, which would resurrect. */
   def dropColumn(name: String): Int = {
-    val base = snapshot(latestVersion)
+    val base = head
     val schema = base.schema
     require(schema.fieldNames.contains(name), s"no such column: $name")
-    val psrc = partitionCols.map(PartitionFields.parse).map(_.source)
+    val psrc = base.partitionCols.map(PartitionFields.parse).map(_.source)
     require(!psrc.contains(name), s"cannot drop partition source column $name")
     require(!base.eqDeleteFiles.exists(_.keyCols.contains(name)),
       s"cannot drop $name: live equality-delete files key on it — " +
@@ -837,7 +830,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * silently divorce the write layout from the planner's function. */
   def widenColumn(name: String, to: org.apache.spark.sql.types.DataType): Int = {
     import org.apache.spark.sql.types._
-    val base = snapshot(latestVersion)
+    val base = head
     val schema = base.schema
     val field = schema.fields.find(_.name == name).getOrElse(
       throw new IllegalArgumentException(s"no such column: $name"))
@@ -852,7 +845,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     require(ok, s"only widening promotions are supported " +
       s"(tinyint→smallint→int→bigint, float→double); " +
       s"got ${field.dataType.simpleString} → ${to.simpleString} for $name")
-    val psrc = partitionCols.map(PartitionFields.parse).map(_.source)
+    val psrc = base.partitionCols.map(PartitionFields.parse).map(_.source)
     require(!psrc.contains(name),
       s"cannot change the type of partition source column $name")
     val widened = StructType(schema.fields.map(f =>
@@ -883,8 +876,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   def append(df: DataFrame, operation: String = "append",
       partitionColsIfNew: Seq[String] = Seq.empty,
       setProps: Map[String, String] = Map.empty): Int = {
-    val pcols = if (latestVersion >= 0) partitionCols else partitionColsIfNew
-    val staged = stage(df, pcols)
+    val base = head
+    val staged = stage(df, base,
+      if (base.version >= 0) base.partitionCols else partitionColsIfNew)
     commit(operation)(b => b.copy(files = b.files ++ staged,
       schemaJson = SnapshotTable.unionSchema(b, df.schema),
       partitionCols = if (b.version < 0) partitionColsIfNew else b.partitionCols,
@@ -893,7 +887,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
 
   /** Replace the whole table content atomically (INSERT OVERWRITE —
     * last-writer-wins by SQL semantics). */
-  def overwrite(df: DataFrame): Int = commitReplacement(df, "overwrite")(_ => ())
+  def overwrite(df: DataFrame): Int =
+    commitReplacement(head, df, "overwrite")(_ => ())
 
   /** Copy-on-write overwrite validated against the snapshot the caller
     * derived `df` from: if another writer committed after `baseVersion`,
@@ -905,16 +900,16 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * while writing the replacement. */
   def replace(baseVersion: Int, df: DataFrame,
       operation: String = "overwrite"): Int =
-    commitReplacement(df, operation)(
+    commitReplacement(head, df, operation)(
       requireUnmoved(_, baseVersion, s"copy-on-write $operation"))
 
-  /** Stage `df` as the table's whole new content and commit it once
-    * `check` passes on the base. The content was derived from a
-    * deletes-applied read (or is new), so both delete ledgers start
-    * clean. */
-  private def commitReplacement(df: DataFrame, operation: String)(
-      check: SnapshotTable.Snapshot => Unit): Int = {
-    val staged = stage(df, partitionCols)
+  /** Stage `df` as the table's whole new content (laid out as `base`
+    * declares) and commit it once `check` passes on the base. The content
+    * was derived from a deletes-applied read (or is new), so both delete
+    * ledgers start clean. */
+  private def commitReplacement(base: SnapshotTable.Snapshot, df: DataFrame,
+      operation: String)(check: SnapshotTable.Snapshot => Unit): Int = {
+    val staged = stage(df, base, base.partitionCols)
     commit(operation) { b =>
       check(b)
       b.copy(files = staged, schemaJson = df.schema.json,
@@ -1010,7 +1005,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * `fileKey`), with identical semantics and the same opt-out.
     */
   def addFiles(sourceDir: String, checkDuplicateFiles: Boolean = true): Int = {
-    val snap = snapshot(latestVersion)
+    val snap = head
     require(snap.partitionCols.isEmpty,
       s"add_files into $location: table is partitioned by " +
         s"${snap.partitionCols.mkString(",")} — adopted files carry no " +
@@ -1089,7 +1084,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     // adopted entries' schemaVersion claim post-rename names they don't
     // store (same hazard replaceWithStagedDir guards). Concurrent pure
     // APPENDS are benign and ride through the retry.
-    val entries = manifestEntries(linked, declared, Seq.empty, snap.version)
+    val entries = manifestEntries(linked, declared, Seq.empty, snap)
     commit("add_files") { base =>
       if (base.schemaJson != snap.schemaJson || base.renames != snap.renames)
         throw new java.util.ConcurrentModificationException(
@@ -1134,7 +1129,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * schemaVersion 0 with an empty rename log.
     */
   def cloneTo(target: String): SnapshotTable = {
-    val snap = snapshot(latestVersion)
+    val snap = head
     require(!SnapshotTable.needsRenameMapping(snap),
       s"clone of $location: a RENAME COLUMN mapping is active on live " +
         "files — run CALL system.compact to rewrite them under the " +
@@ -1153,8 +1148,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       s"clone of $location: live equality-delete files scope on the " +
         "source's version sequence — run CALL system.compact to fold " +
         "them, then clone")
+    require(!SnapshotTable.exists(target), s"table already exists at $target")
     val t = new SnapshotTable(spark, target)
-    require(t.latestVersion < 0, s"table already exists at $target")
     val srcData = dataDir
     val destData = Paths.get(target, "data")
     // link under a UNIQUE subdir of data/ — NOTHING is ever deleted here,
@@ -1188,10 +1183,6 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
 
   // ----------------------------------------------------------------- refs
 
-  private def refsDir: Path = Paths.get(location, "_refs")
-  private def tagFile(name: String): Path = refsDir.resolve(s"$name.tag.json")
-  private def branchDir(name: String): Path = refsDir.resolve(name)
-
   /** Create branch `name` at `atVersion` (default: current head) — the
     * Iceberg branching model's mutable ref, and the isolation primitive
     * of write-audit-publish: writers commit to the branch's own snapshot
@@ -1209,12 +1200,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val v = if (atVersion < 0) latestVersion else atVersion
     require(v >= 0, s"cannot branch an empty table at $location")
     val seed = snapshot(v).copy(operation = "branch")
-    require(!Files.exists(tagFile(name)),
+    require(SnapshotLog.tag(location, name).isEmpty,
       s"ref '$name' already exists at $location")
-    Files.createDirectories(branchDir(name))
-    val dest = branchDir(name).resolve(f"v$v%05d.json")
-    require(CommitPrimitive.forDest(dest).publish(
-        dest, SnapshotTable.renderSnapshot(seed)),
+    require(SnapshotLog.branch(location, name).publish(
+        v, SnapshotTable.renderSnapshot(seed)),
       s"ref '$name' already exists at $location")
   }
 
@@ -1228,11 +1217,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     SnapshotTable.validateRefName(name, location)
     val v = if (atVersion < 0) latestVersion else atVersion
     require(versions.contains(v), s"no snapshot v$v at $location")
-    require(!Files.isDirectory(branchDir(name)),
+    require(!SnapshotLog.isBranch(location, name),
       s"ref '$name' already exists at $location")
-    Files.createDirectories(refsDir)
-    require(CommitPrimitive.forDest(tagFile(name)).publish(
-        tagFile(name), s"""{"version":$v}"""),
+    require(SnapshotLog.publishTag(location, name, v),
       s"ref '$name' already exists at $location (tags are immutable)")
   }
 
@@ -1250,40 +1237,32 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
 
   /** The version a tag pins. */
   def tagVersion(name: String): Int = {
-    require(Files.exists(tagFile(name)), s"no tag '$name' at $location")
-    val node = SnapshotTable.mapper.readTree(Files.readString(tagFile(name)))
-    node.get("version").asInt
+    val v = SnapshotLog.tag(location, name)
+    require(v.isDefined, s"no tag '$name' at $location")
+    v.get
   }
 
   /** Every snapshot on every branch chain. */
   private def branchSnapshots: Seq[SnapshotTable.Snapshot] =
-    refs.collect { case (n, ("branch", _)) => n }.toSeq.flatMap { n =>
-      val b = branch(n)
-      b.versions.map(b.snapshot)
-    }
+    SnapshotLog.refNames(location).collect { case (n, true) =>
+      SnapshotLog.branch(location, n)
+    }.flatMap(b => b.versions.map(b.read))
 
   /** All refs: name -> (type `branch`|`tag`, head / pinned version). */
-  def refs: Map[String, (String, Int)] = {
-    if (!Files.isDirectory(refsDir)) return Map.empty
-    scala.util.Using.resource(Files.list(refsDir))(_.iterator().asScala.flatMap { p =>
-      val fn = p.getFileName.toString
-      if (Files.isDirectory(p)) {
-        val b = new SnapshotTable(spark, location, Some(fn))
-        Some(fn -> ("branch", b.latestVersion))
-      } else if (fn.endsWith(".tag.json")) {
-        val name = fn.stripSuffix(".tag.json")
-        Some(name -> ("tag", tagVersion(name)))
-      } else None
-    }.toMap)
-  }
+  def refs: Map[String, (String, Int)] =
+    SnapshotLog.refNames(location).map {
+      case (n, true) => n -> ("branch", SnapshotLog.branch(location, n).headVersion)
+      case (n, false) => n -> ("tag", tagVersion(n))
+    }.toMap
 
   /** Resolve a ref name to the snapshot a read should pin: a branch's
     * head, or a tag's pinned version — `VERSION AS OF 'name'` routes
     * here when the version string is not numeric. */
   def resolveRef(name: String): SnapshotTable.Snapshot =
-    if (Files.isDirectory(branchDir(name))) {
-      val b = branch(name)
-      b.snapshot(b.latestVersion)
+    if (SnapshotLog.isBranch(location, name)) {
+      val b = SnapshotLog.branch(location, name).head
+      require(b.version >= 0, s"no branch '$name' at $location")
+      b
     } else snapshot(tagVersion(name))
 
   /** Drop a branch (chain and all) or a tag. Data files that only the
@@ -1292,10 +1271,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * holding the ref's snapshot finishes its scan. */
   def dropRef(name: String): Unit = {
     requireMain("drop_ref")
-    if (Files.isDirectory(branchDir(name)))
-      graft.Tables.deleteRecursively(branchDir(name).toString)
-    else if (Files.exists(tagFile(name))) Files.delete(tagFile(name))
-    else throw new IllegalArgumentException(s"no ref '$name' at $location")
+    if (!SnapshotLog.dropRef(location, name))
+      throw new IllegalArgumentException(s"no ref '$name' at $location")
   }
 
   /** Publish branch `name`: commit its head state onto main as one atomic
@@ -1314,10 +1291,12 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * physically stores the current column names. */
   def fastForward(name: String): Int = {
     requireMain("fast_forward")
-    val b = branch(name)
-    val seedV = b.versions.head
-    val head = b.snapshot(b.latestVersion)
-    val seed = b.snapshot(seedV)
+    val chain = SnapshotLog.branch(location, name)
+    val vs = chain.versions
+    require(vs.nonEmpty, s"no branch '$name' at $location")
+    val seedV = vs.head
+    val head = chain.read(vs.last)
+    val seed = chain.read(seedV)
     val seedPaths = seed.files.map(_.path).toSet
     // equality deletes ADDED on the branch scope on branch-chain version
     // numbers that collapse into ONE publish version here — a branch file
@@ -1367,11 +1346,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       operation: String = "overwrite",
       setProps: Map[String, String] = Map.empty): Int = {
     import org.apache.spark.sql.functions.{coalesce, lit, not}
-    val baseV = latestVersion
-    val base = snapshot(baseV)
+    val base = head
+    val baseV = base.version
     val schema = base.schema
-    val rewrite = StatsPruning.prune(base.files,
-      prunablePredicates(cond, schema))
+    val rewrite = StatsPruning.prune(base.files, prunablePredicates(cond, base))
     val rewriteSet = rewrite.map(_.path).toSet
     val replacement =
       if (rewrite.isEmpty) df
@@ -1387,7 +1365,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
           base.eqDeleteFiles)
         .filter(not(coalesce(cond, lit(false))))
         .unionByName(df, allowMissingColumns = true)
-    val staged = stage(replacement, partitionCols)
+    val staged = stage(replacement, base, base.partitionCols)
     commit(operation) { b =>
       requireUnmoved(b, baseV, s"scoped $operation")
       b.copy(files = b.files.filterNot(f => rewriteSet(f.path)) ++ staged,
@@ -1417,7 +1395,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   def compact(targetBytes: Long = 256L * 1024 * 1024,
       clusterBy: Seq[String] = Nil, zorderBy: Seq[String] = Nil): Int = {
     import org.apache.spark.sql.functions.col
-    val base = snapshot(latestVersion)
+    val base = head
     val inputs = base.files.map(_.path).toSet
     // file sizes come from the manifest (recorded at stage time); fall back
     // to a driver stat only for legacy manifests without byte counts
@@ -1444,7 +1422,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       else data.repartition(nFiles)
     // an explicit zorder/cluster arrangement overrides the declared
     // write sort order for this rewrite; plain compaction honors it
-    val staged = stage(arranged, base.partitionCols,
+    val staged = stage(arranged, base, base.partitionCols,
       applySortOrder = zorderBy.isEmpty && clusterBy.isEmpty)
     commit("compact") { b =>
       requireLive(b, inputs, "compaction")
@@ -1492,12 +1470,12 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     */
   def upsert(updates: DataFrame, keyCols: Seq[String]): Int = {
     import org.apache.spark.sql.functions.col
-    val baseV = latestVersion
-    val current = readVersion(baseV)
-    val merged = current
+    val base = head
+    val merged = readSnapshotFiles(base, base.files, base.schema)
       .join(updates.select(keyCols.map(col): _*), keyCols, "left_anti")
       .unionByName(updates, allowMissingColumns = true)
-    replace(baseV, merged, "overwrite")
+    commitReplacement(base, merged, "overwrite")(
+      requireUnmoved(_, base.version, "copy-on-write overwrite"))
   }
 
   /** The stats-prunable conjuncts of `cond`, resolved against the table
@@ -1506,8 +1484,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * pins; unsupported shapes yield nothing and every file conservatively
     * survives pruning. Shared by [[replaceWhere]] and [[positionDelete]]. */
   private def prunablePredicates(cond: org.apache.spark.sql.Column,
-      schema: org.apache.spark.sql.types.StructType)
-      : Seq[org.apache.spark.sql.sources.Filter] = {
+      base: SnapshotTable.Snapshot): Seq[org.apache.spark.sql.sources.Filter] = {
+    val schema = base.schema
     val pred = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       .filter(cond).queryExecution.analyzed.collectFirst {
@@ -1516,14 +1494,14 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     // bucket transforms: a key-equality/IN predicate pins the touched
     // bucket ids, letting a hash-partitioned table prune by partition
     // value where min/max ranges cannot (hash destroys value order)
-    pred ++ StatsPruning.bucketDerived(partitionCols, schema, pred)
+    pred ++ StatsPruning.bucketDerived(base.partitionCols, schema, pred)
   }
 
   /** True when the latest snapshot carries live position- or equality-
     * delete files — i.e. reads must take the merge-on-read path until
     * [[compact]] folds the ledger back into plain files. */
-  def hasDeletes: Boolean = latestVersion >= 0 && {
-    val s = snapshot(latestVersion)
+  def hasDeletes: Boolean = {
+    val s = head
     s.deleteFiles.nonEmpty || s.eqDeleteFiles.nonEmpty
   }
 
@@ -1547,11 +1525,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * Returns the number of rows deleted. */
   def positionDelete(cond: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val baseV = latestVersion
-    val base = snapshot(baseV)
+    val base = head
     val schema = base.schema
-    val candidates = StatsPruning.prune(base.files,
-      prunablePredicates(cond, schema))
+    val candidates = StatsPruning.prune(base.files, prunablePredicates(cond, base))
     if (candidates.isEmpty) return 0L
     val scanned = candidates.map(_.path).toSet
     val entries = readWithDeletes(candidates, schema, base.renames,
@@ -1577,8 +1553,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * keys; the data write is a plain staged append. */
   def mergeMor(updates: DataFrame, keyCols: Seq[String]): Int = {
     import org.apache.spark.sql.functions.col
-    val baseV = latestVersion
-    val base = snapshot(baseV)
+    val base = head
     val schema = base.schema
     val entries = readWithDeletes(base.files, schema, base.renames,
         base.deleteFiles, base.eqDeleteFiles, withRowMeta = true)
@@ -1586,9 +1561,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       .select(col(SnapshotTable.MetaFile).as("file_path"),
         col(SnapshotTable.MetaPos).as("pos"))
     val stagedDeletes = stageDeleteEntries(entries)
-    val stagedData = stage(updates, partitionCols)
+    val stagedData = stage(updates, base, base.partitionCols)
     commit("merge") { b =>
-      requireUnmoved(b, baseV, "merge-on-read MERGE")
+      requireUnmoved(b, base.version, "merge-on-read MERGE")
       b.copy(files = b.files ++ stagedData,
         schemaJson = SnapshotTable.unionSchema(b, updates.schema),
         deleteFiles = b.deleteFiles ++ stagedDeletes)
@@ -1610,13 +1585,13 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * distinct key-tuple count (the rows deleted are unknowable without
     * the scan this operation exists to avoid — Iceberg's contract too). */
   def equalityDelete(keys: DataFrame): Long = {
-    require(latestVersion >= 0,
+    val base = head
+    require(base.version >= 0,
       s"equalityDelete: table does not exist at $location")
-    val base = snapshot(latestVersion)
     val staged = stageEqDeleteEntries(keys, base)
     if (staged.isEmpty) return 0L
-    commit("delete")(b => b.copy(eqDeleteFiles = b.eqDeleteFiles ++ staged))
-    maybeAutoFold()
+    maybeAutoFold(
+      commit("delete")(b => b.copy(eqDeleteFiles = b.eqDeleteFiles ++ staged)))
     staged.map(_.rows).sum
   }
 
@@ -1635,35 +1610,38 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     require(keyCols.nonEmpty, "upsertMor needs at least one key column")
     keyCols.foreach(k => require(updates.columns.exists(_.equalsIgnoreCase(k)),
       s"upsertMor key column $k missing from the update frame"))
-    require(latestVersion >= 0,
+    val base = head
+    require(base.version >= 0,
       s"upsertMor: table does not exist at $location")
-    val base = snapshot(latestVersion)
     val stagedDeletes = stageEqDeleteEntries(
       updates.select(keyCols.map(col): _*), base)
-    val stagedData = stage(updates, partitionCols)
+    val stagedData = stage(updates, base, base.partitionCols)
     val v = commit(operation)(b => b.copy(files = b.files ++ stagedData,
       schemaJson = SnapshotTable.unionSchema(b, updates.schema),
       eqDeleteFiles = b.eqDeleteFiles ++ stagedDeletes))
-    maybeAutoFold()
+    maybeAutoFold(v)
     v
   }
 
   /** Auto-fold policy ([[SnapshotTable.MaxEqDeleteFiles]], the Snowflake
     * auto-clustering analog): when set, any upsert/delete commit that
-    * leaves MORE than `bound` live equality-delete files triggers
-    * [[foldEqDeletes]] — so a 24/7 upsert stream's read-side strata stay
-    * ≤ bound+1 without an external maintenance job. A failed fold (lost
-    * race) is logged and skipped, never failing the commit that
-    * triggered it — the next epoch re-triggers. */
-  private def maybeAutoFold(): Unit =
-    properties.get(SnapshotTable.MaxEqDeleteFiles)
+    * leaves MORE than `bound` live equality-delete files (read from the
+    * `committed` version) triggers [[foldEqDeletes]] — so a 24/7 upsert
+    * stream's read-side strata stay ≤ bound+1 without an external
+    * maintenance job. A failed fold (lost race) is logged and skipped,
+    * never failing the commit that triggered it — the next epoch
+    * re-triggers. */
+  private def maybeAutoFold(committed: Int): Unit = {
+    val s = snapshot(committed)
+    s.properties.get(SnapshotTable.MaxEqDeleteFiles)
       .flatMap(_.trim.toIntOption).foreach { bound =>
-        if (snapshot(latestVersion).eqDeleteFiles.size > bound)
+        if (s.eqDeleteFiles.size > bound)
           try { foldEqDeletes(); () }
           catch { case e: Exception =>
             System.err.println(s"[graft] auto-fold of $location skipped: $e")
           }
       }
+  }
 
   /** Fold the equality-delete ledger into the data: rewrite ONLY the
     * data files that may contain a deleted key — per delete file, the
@@ -1681,9 +1659,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * Returns the fold's commit version, or -1 if the ledger was empty. */
   def foldEqDeletes(): Int = {
     import org.apache.spark.sql.functions.{col, isnull, max => smax, min => smin}
-    require(latestVersion >= 0,
+    val base = head
+    require(base.version >= 0,
       s"foldEqDeletes: table does not exist at $location")
-    val base = snapshot(latestVersion)
     val eqDels = base.eqDeleteFiles
     if (eqDels.isEmpty) return -1
     val schema = base.schema
@@ -1723,7 +1701,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val affectedSet = affected.map(_.path).toSet
     val staged =
       if (affected.isEmpty) Seq.empty
-      else stage(readSnapshotFiles(base, affected, schema), base.partitionCols)
+      else stage(readSnapshotFiles(base, affected, schema), base, base.partitionCols)
     commit("fold_eq_deletes") { b =>
       requireLive(b, affectedSet, "fold_eq_deletes")
       requireLedgers(b, base, "fold_eq_deletes")
@@ -1803,8 +1781,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   }
 
   /** Current table properties (carried forward by every commit). */
-  def properties: Map[String, String] =
-    if (latestVersion >= 0) snapshot(latestVersion).properties else Map.empty
+  def properties: Map[String, String] = head.properties
 
   /** ALTER TABLE … SET/UNSET TBLPROPERTIES: one metadata-only commit
     * merging `set` and dropping `unset`. Retention floors
@@ -1824,7 +1801,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       require(v.trim.matches("\\d+") && v.trim.toInt >= 1,
         s"${SnapshotTable.MaxEqDeleteFiles} must be a positive integer, got '$v'"))
     set.get(SnapshotTable.SortOrder).foreach { v =>
-      val declared = snapshot(latestVersion).schema.fieldNames
+      val declared = head.schema.fieldNames
       v.split(",").map(_.trim).filter(_.nonEmpty).foreach(c =>
         require(declared.exists(_.equalsIgnoreCase(c)),
           s"${SnapshotTable.SortOrder}: unknown column $c"))
@@ -1857,13 +1834,13 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * recovery error in the streaming source. */
   def expireSnapshots(keepLast: Int): Unit = {
     requireMain("expire_snapshots")
-    val props = properties
+    val all = versions
+    val props = all.lastOption.fold(Map.empty[String, String])(snapshot(_).properties)
     val floorKeep = props.get(SnapshotTable.MinSnapshotsToKeep)
       .map(_.trim.toInt).getOrElse(1)
     val minAgeMs = props.get(SnapshotTable.MaxSnapshotAgeMs)
       .map(_.trim.toLong).getOrElse(0L)
     val now = System.currentTimeMillis()
-    val all = versions
     val byCount = all.splitAt(
       math.max(0, all.size - math.max(keepLast, floorKeep)))._1
     // commit timestamps are monotone across versions, so the age floor
@@ -1885,23 +1862,19 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       .flatMap(SnapshotTable.referencedPaths).toSet
     val dead = drop.map(snapshot).flatMap(SnapshotTable.referencedPaths).toSet -- live
     dead.foreach(p => Files.deleteIfExists(Paths.get(p)))
-    drop.foreach(v => Files.deleteIfExists(snapDir.resolve(f"v$v%05d.json")))
+    drop.foreach(log.drop)
     // manifest-chunk sweep: chunks referenced by NO surviving snapshot
     // (main or branch) and older than an hour are garbage — expired
     // versions' chunks, lost-race commit attempts, dropped branches. The
     // grace window protects a concurrent writer's just-published chunks.
-    if (Files.isDirectory(manifestsDir)) {
-      val liveRefs = (keep.map(snapshot) ++ branchSnaps)
-        .flatMap(_.manifestRefs)
-        .map(r => Paths.get(r).toAbsolutePath.normalize.toString).toSet
-      val cutoffMs = System.currentTimeMillis() - 3600L * 1000
-      scala.util.Using.resource(Files.list(manifestsDir))(
-        _.iterator().asScala
-          .filter(p => Files.isRegularFile(p))
-          .filterNot(p => liveRefs(p.toAbsolutePath.normalize.toString))
-          .filter(p => Files.getLastModifiedTime(p).toMillis < cutoffMs)
-          .toList).foreach(p => Files.deleteIfExists(p))
-    }
+    val liveRefs = (keep.map(snapshot) ++ branchSnaps)
+      .flatMap(_.manifestRefs)
+      .map(r => Paths.get(r).toAbsolutePath.normalize.toString).toSet
+    val cutoffMs = System.currentTimeMillis() - 3600L * 1000
+    SnapshotLog.chunks(location)
+      .filterNot(p => liveRefs(p.toAbsolutePath.normalize.toString))
+      .filter(p => Files.getLastModifiedTime(p).toMillis < cutoffMs)
+      .foreach(p => Files.deleteIfExists(p))
     // orphan sweep: staging dirs survive only if a writer crashed between
     // staging and commit/abort — anything older than an hour is garbage
     val staging = Paths.get(location, "_staging")
@@ -1927,18 +1900,14 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * values as min==max manifest stats, so partition pruning rides the
     * same stats-pruning machinery as data-column range skipping.
     */
-  private def stage(df: DataFrame,
+  private def stage(df: DataFrame, base: SnapshotTable.Snapshot,
       pcols: Seq[String],
       applySortOrder: Boolean = true): Seq[SnapshotTable.DataFile] = {
-    // the schema generation these files are written under — the rename
-    // log classifies files by it (a rename committed LATER has a higher
-    // version, so these files correctly resolve to their written names)
-    val schemaGen = latestVersion
     // the declared write sort order, restricted to columns this frame
     // actually carries (see [[SnapshotTable.SortOrder]])
     val sortCols: Seq[String] =
       if (!applySortOrder) Seq.empty
-      else properties.getOrElse(SnapshotTable.SortOrder, "")
+      else base.properties.getOrElse(SnapshotTable.SortOrder, "")
         .split(",").map(_.trim).filter(_.nonEmpty).toSeq
         .filter(c => df.columns.exists(_.equalsIgnoreCase(c)))
     // INT64 micros timestamps: footer stats are usable (INT96 has none)
@@ -2083,28 +2052,32 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
         graft.Tables.deleteRecursively(tmp.toString)
         moved.sorted
       }
-    manifestEntries(paths, df.schema, pcols, schemaGen)
+    manifestEntries(paths, df.schema, pcols, base)
   }
 
   /** Footer-stats manifest entries for already-written parquet files: row
     * counts, byte sizes, and min/max stats from a distributed metadata-only
     * footer pass, plus Hive partition values recovered from directory
-    * names as min==max stats. */
+    * names as min==max stats. The files are written under `base`'s schema
+    * generation — the rename log classifies files by it (a rename
+    * committed LATER has a higher version, so these files correctly
+    * resolve to their written names) — and sketched as its properties
+    * ask. */
   private def manifestEntries(paths: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
-      pcols: Seq[String], schemaVersion: Int): Seq[SnapshotTable.DataFile] = {
+      pcols: Seq[String], base: SnapshotTable.Snapshot): Seq[SnapshotTable.DataFile] = {
     val statCols: Seq[(String, String)] = schema.fields.toSeq
       .flatMap(f => SnapshotTable.statType(f.dataType).map(t => f.name -> t))
       .take(8)
     val schemaByName = schema.fields.map(f => f.name -> f.dataType).toMap
     val footer = footerStatsOf(paths, statCols)
-    val sketches = ndvSketches(paths, schema)
+    val sketches = ndvSketches(paths, schema, base.properties)
     paths.map { p =>
       val (rows, bytes, stats) = footer.getOrElse(p, (-1L, -1L, Map.empty[String, SnapshotTable.ColStats]))
       // partition values ride the stats map as min==max entries
       val partStats = SnapshotTable.partitionValueStats(
         dataDir.toString, p, pcols, schemaByName)
-      SnapshotTable.DataFile(p, rows, stats ++ partStats, bytes, schemaVersion,
+      SnapshotTable.DataFile(p, rows, stats ++ partStats, bytes, base.version,
         sketches.getOrElse(readerPath(p), Map.empty))
     }
   }
@@ -2152,11 +2125,11 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * Keyed by the reader's path spelling ([[readerPath]]). Empty map
     * (zero cost) unless the table opted in. */
   private def ndvSketches(paths: Seq[String],
-      schema: org.apache.spark.sql.types.StructType)
-      : Map[String, Map[String, String]] = {
+      schema: org.apache.spark.sql.types.StructType,
+      props: Map[String, String]): Map[String, Map[String, String]] = {
     import org.apache.spark.sql.functions.{col, expr}
     import org.apache.spark.sql.types._
-    val prop = properties.get(SnapshotTable.NdvSketchColumns)
+    val prop = props.get(SnapshotTable.NdvSketchColumns)
       .map(_.trim).filter(_.nonEmpty)
     if (prop.isEmpty || paths.isEmpty) return Map.empty
     // hll_sketch_agg accepts int/long/string/binary: route dates and
@@ -2209,8 +2182,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * any live file lacks a sketch for the column (an unknown must read
     * as unknown, never as an undercount). */
   def ndvEstimate(column: String): Option[Long] = {
-    val snap = snapshot(latestVersion)
-    val perFile = snap.files.map(_.ndv.get(column))
+    val perFile = head.files.map(_.ndv.get(column))
     if (perFile.isEmpty || perFile.exists(_.isEmpty)) return None
     val union = new org.apache.datasketches.hll.Union(12)
     perFile.flatten.foreach { b64 =>
@@ -2230,8 +2202,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       stagedDir: java.nio.file.Path, operation: String,
       replacedPaths: Option[Set[String]] = None): Int = {
     val moved = moveIntoData(parquetFilesIn(stagedDir))
-    val files = manifestEntries(moved, snapshot(baseVersion).schema, Seq.empty,
-      baseVersion)
+    val base = snapshot(baseVersion)
+    val files = manifestEntries(moved, base.schema, Seq.empty, base)
     commit(operation) { b =>
       requireUnmoved(b, baseVersion, s"row-level $operation")
       // None = full replace, which starts a clean position ledger;
@@ -2247,7 +2219,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     }
   }
 
-  /** True if any snapshot was committed with `operation` — the replay
+  /** True if any snapshot was committed with `operation` — the one replay
     * check behind exactly-once streaming epochs. */
   def hasOperation(operation: String): Boolean =
     versions.exists(v => snapshot(v).operation == operation)
@@ -2280,17 +2252,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       edit: (SnapshotTable.Snapshot, Seq[SnapshotTable.DataFile]) =>
         SnapshotTable.Snapshot): Int = {
     val moved = moveIntoData(stagedPaths)
-    val files = manifestEntries(moved, schema, Seq.empty, latestVersion)
+    val files = manifestEntries(moved, schema, Seq.empty, head)
     commit(operation)(edit(_, files))
   }
-
-  /** Where manifest chunks live — under the MAIN snapshot dir for branch
-    * commits too: fast_forward publishes branch documents' refs into
-    * main's chain, and `drop_ref` deletes the branch dir, so a chunk
-    * under `_refs/<name>/` could be yanked from under a main snapshot
-    * that references it. Unreferenced chunks are swept by expiration. */
-  private def manifestsDir: Path =
-    Paths.get(location, "_snapshots", "manifests")
 
   /** Decide this commit's manifest layout. Small file lists stay INLINE
     * in the snapshot document (zero overhead, the dominant test/dev
@@ -2326,12 +2290,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       }
     }
     val leftovers = stamped.filterNot(f => covered(f.path))
-    Files.createDirectories(manifestsDir)
-    val newRefs = leftovers.grouped(SnapshotTable.ChunkEntries).map { group =>
-      val p = manifestsDir.resolve(s"m-${java.util.UUID.randomUUID}.json")
-      Files.writeString(p, SnapshotTable.renderChunk(group))
-      p.toString
-    }.toSeq
+    // chunks live under main's log for branch commits too (see
+    // SnapshotLog); unreferenced ones are swept by expiration
+    val newRefs = SnapshotLog.writeChunks(location, leftovers
+      .grouped(SnapshotTable.ChunkEntries).map(SnapshotTable.renderChunk).toSeq)
     (reusedRefs.result() ++ newRefs, reusedEntries.result() ++ leftovers)
   }
 
@@ -2359,11 +2321,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     var attempts = 0
     while (attempts < SnapshotTable.CommitAttempts) {
       attempts += 1
-      val baseV = latestVersion
-      val base =
-        if (baseV >= 0) snapshot(baseV)
-        else SnapshotTable.Snapshot(-1, 0L, "", Seq.empty, "none")
-      val v = baseV + 1
+      val base = head
+      val v = base.version + 1
       val next = edit(base)
       def stamp(at: Int): Int = if (at < 0) v else at
       val basePaths = base.files.map(_.path).toSet
@@ -2377,13 +2336,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
         eqDeleteFiles = next.eqDeleteFiles.map(d =>
           d.copy(atVersion = stamp(d.atVersion))),
         manifestRefs = refs)
-      Files.createDirectories(snapDir)
-      // the commit point: atomic publish-if-absent of the version file
+      // the commit point: atomic publish-if-absent of the version
       // ([[CommitPrimitive]] — hard link here, conditional PUT on S3)
-      val dest = snapDir.resolve(f"v$v%05d.json")
-      if (CommitPrimitive.forDest(dest).publish(
-          dest, SnapshotTable.renderSnapshot(snap)))
-        return v
+      if (log.publish(v, SnapshotTable.renderSnapshot(snap))) return v
     }
     throw new IllegalStateException(s"commit to $location lost " +
       s"${SnapshotTable.CommitAttempts} races, giving up")
@@ -2886,9 +2841,7 @@ object SnapshotTable {
       else org.apache.spark.sql.types.StructType(base.schema.fields ++ extra).json
     }
 
-  private val SnapName = "v([0-9]{5})\\.json".r
-
-  /** Ref names live in the filesystem namespace under `_refs/`, so the
+  /** Ref names live in the filesystem namespace of the refs, so the
     * charset is restricted up front — and `main` is reserved so
     * `VERSION AS OF 'main'`-style strings can never shadow the table. */
   private[table] def validateRefName(name: String, location: String): Unit =
@@ -2902,8 +2855,8 @@ object SnapshotTable {
   def create(spark: SparkSession, location: String, df: DataFrame,
       partitionCols: Seq[String] = Seq.empty,
       properties: Map[String, String] = Map.empty): SnapshotTable = {
+    require(!exists(location), s"table already exists at $location")
     val t = new SnapshotTable(spark, location)
-    require(t.latestVersion < 0, s"table already exists at $location")
     t.append(df, partitionColsIfNew = partitionCols, setProps = properties)
     t
   }
@@ -2912,17 +2865,26 @@ object SnapshotTable {
   def createEmpty(spark: SparkSession, location: String,
       schema: org.apache.spark.sql.types.StructType,
       partitionCols: Seq[String] = Seq.empty): SnapshotTable = {
+    require(!exists(location), s"table already exists at $location")
     val t = new SnapshotTable(spark, location)
-    require(t.latestVersion < 0, s"table already exists at $location")
     t.commitEmpty(schema.json, partitionCols)
     t
   }
 
+  /** True when a table is committed at `location`: main holds at least
+    * one version. The one existence test — a directory left by a first
+    * commit that crashed before its publish is not a table. */
+  def exists(location: String): Boolean = SnapshotLog.exists(location)
+
+  /** The table at `location`, or None when it does not [[exists]]. */
+  def find(spark: SparkSession, location: String): Option[SnapshotTable] =
+    if (exists(location)) Some(new SnapshotTable(spark, location)) else None
+
   /** Open an existing table. */
   def load(spark: SparkSession, location: String): SnapshotTable = {
-    val t = new SnapshotTable(spark, location)
-    require(t.latestVersion >= 0, s"no snapshot log at $location")
-    t
+    val t = find(spark, location)
+    require(t.isDefined, s"no snapshot log at $location")
+    t.get
   }
 
   /** Open a handle WITHOUT the existence check — for internal callers

@@ -32,10 +32,8 @@ object Tiering {
     val current = hot.readVersion(baseV)
     val toCold = current.filter(col("ts") < b)
     val keepHot = current.filter(col("ts") >= b || col("ts").isNull)
-    val cold =
-      if (new java.io.File(s"$coldLoc/_snapshots").isDirectory) {
-        val c = SnapshotTable.load(spark, coldLoc); c.append(toCold); c
-      } else SnapshotTable.create(spark, coldLoc, toCold)
+    val cold = SnapshotTable.find(spark, coldLoc)
+      .fold(SnapshotTable.create(spark, coldLoc, toCold)) { c => c.append(toCold); c }
     hot.replace(baseV, keepHot, "overwrite")
     (hot, cold)
   }

@@ -32,4 +32,30 @@ class DdlSpec extends SparkFunSuite {
     spark.sql("DROP TABLE ddx.db.renamed")
     assert(!spark.catalog.tableExists("ddx.db.renamed"))
   }
+
+  test("RENAME carries branch chains and manifest chunks to the new location") {
+    import spark.implicits._
+    val wh = scratch("ddl-wh-refs")
+    spark.conf.set("spark.sql.catalog.ddr", classOf[GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.ddr.warehouse", wh)
+    spark.sql("CREATE TABLE ddr.db.t (id BIGINT, v DOUBLE)")
+    // one entry per inline manifest: every later commit writes chunk files
+    spark.sql("ALTER TABLE ddr.db.t SET TBLPROPERTIES " +
+      s"('${SnapshotTable.ManifestInlineMax}' = '1')")
+    spark.sql("INSERT INTO ddr.db.t VALUES (1, 1.0), (2, 2.0)")
+    spark.sql("INSERT INTO ddr.db.t VALUES (3, 3.0)")
+    val t = SnapshotTable.load(spark, s"$wh/db/t")
+    val v = t.latestVersion
+    assert(t.snapshot(v).manifestRefs.nonEmpty)
+    t.createBranch("audit")
+    t.branch("audit").append(Seq((4L, 4.0)).toDF("id", "v"))
+
+    spark.sql("ALTER TABLE ddr.db.t RENAME TO db.moved")
+    assert(spark.table("ddr.db.moved").count() == 3)
+    assert(spark.sql("SELECT count(*) FROM ddr.db.moved VERSION AS OF 'audit'")
+      .head().getLong(0) == 4)
+    assert(spark.sql(s"SELECT count(*) FROM ddr.db.moved VERSION AS OF ${v - 1}")
+      .head().getLong(0) == 2)
+    assert(!spark.catalog.tableExists("ddr.db.t"))
+  }
 }

@@ -174,4 +174,14 @@ class GraftCatalogSpec extends SparkFunSuite {
     assert(spark.sql("SELECT CAST(sum(id) AS BIGINT) FROM tt.db.sqlconc")
       .head().getLong(0) == (1 + 10 + 2 + 20 + 3 + 30))
   }
+
+  test("an empty snapshot directory left by a crashed first commit is not a table") {
+    val loc = s"$wh/db/crashed"
+    graft.Tables.deleteRecursively(loc)
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(loc, "_snapshots"))
+    assert(!spark.catalog.tableExists("tt.db.crashed"))
+    spark.sql("CREATE TABLE IF NOT EXISTS tt.db.crashed (id BIGINT)")
+    spark.sql("INSERT INTO tt.db.crashed VALUES (1), (2)")
+    assert(spark.sql("SELECT count(*) FROM tt.db.crashed").head().getLong(0) == 2L)
+  }
 }

@@ -269,4 +269,24 @@ class SnapshotTableSpec extends SparkFunSuite {
     t.append(events.limit(5)) // restored after the scope
     assert(calls == 1)
   }
+
+  test("versions past v99,999 stay in order: append, read and expire across the boundary") {
+    import java.nio.file.{Files, Paths}
+    val loc = scratch("snap-cliff")
+    val t = SnapshotTable.create(spark, loc, events.limit(3))
+    // a head at v99,999 without 100k commits: v0's document, renumbered
+    val snaps = Paths.get(loc, "_snapshots")
+    Files.writeString(snaps.resolve("v99999.json"),
+      Files.readString(snaps.resolve("v00000.json"))
+        .replaceFirst("\"version\"\\s*:\\s*0", "\"version\" : 99999"))
+    assert(t.latestVersion == 99999)
+    assert(t.append(events.limit(2)) == 100000)
+    assert(t.latestVersion == 100000)
+    assert(t.read().count() == 5)
+    assert(t.append(events.limit(1)) == 100001)
+    assert(SnapshotTable.load(spark, loc).read().count() == 6)
+    t.expireSnapshots(keepLast = 1)
+    assert(t.versions == Seq(100001))
+    assert(t.read().count() == 6)
+  }
 }
