@@ -393,17 +393,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     var propUnset = Set.empty[String]
     changes.foreach {
       case sp: TableChange.SetProperty =>
-        // retention floors are validated the same way the API path does
-        if (sp.property() == SnapshotTable.MinSnapshotsToKeep)
-          require(sp.value().trim.matches("\\d+") && sp.value().trim.toInt >= 1,
-            s"${sp.property()} must be a positive integer, got '${sp.value()}'")
-        if (sp.property() == SnapshotTable.MaxSnapshotAgeMs)
-          require(sp.value().trim.matches("\\d+"),
-            s"${sp.property()} must be a non-negative integer, got '${sp.value()}'")
-        if (sp.property() == SnapshotTable.SortOrder)
-          sp.value().split(",").map(_.trim).filter(_.nonEmpty).foreach(c =>
-            require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
-              s"${SnapshotTable.SortOrder}: unknown column $c"))
+        SnapshotTable.checkProperties(Map(sp.property() -> sp.value()), schema)
         propSet += sp.property() -> sp.value()
       case rp: TableChange.RemoveProperty =>
         propUnset += rp.property()
@@ -417,22 +407,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       case rn: TableChange.RenameColumn =>
         val oldName = single(rn.fieldNames(), "rename")
         val newName = rn.newName()
-        require(schema.fieldNames.contains(oldName), s"no such column: $oldName")
-        require(!schema.fieldNames.contains(newName),
-          s"column $newName already exists")
-        require(!psrc.contains(oldName),
-          s"cannot rename partition source column $oldName")
-        require(!historical.contains(newName),
-          s"cannot rename to $newName: a previous schema generation used that " +
-            "name and old data files may still store it — pick a fresh name")
+        t.checkRename(base, schema, historical, oldName, newName)
         schema = StructType(schema.fields.map(f =>
           if (f.name == oldName) f.copy(name = newName) else f))
         renamed :+= (newName -> oldName)
       case del: TableChange.DeleteColumn =>
         val name = single(del.fieldNames(), "drop")
-        require(schema.fieldNames.contains(name), s"no such column: $name")
-        require(!psrc.contains(name), s"cannot drop partition source column $name")
-        require(schema.fields.length > 1, "cannot drop the last column")
+        t.checkDrop(base, schema, name)
         schema = StructType(schema.fields.filterNot(_.name == name))
       case upd: TableChange.UpdateColumnType =>
         val name = single(upd.fieldNames(), "type change")

@@ -104,7 +104,8 @@ class GraftTable(tableName: String, location: String,
     * a DSv2 [[org.apache.spark.sql.connector.read.V1Scan]] whose relation
     * materializes the SAME plan every other read surface uses —
     * [[SnapshotTable.readSnapshotFiles]]: file-list parquet read with row
-    * provenance, broadcast anti-join against the delete ledger. Pushed
+    * provenance, the delete ledger applied as literal row predicates
+    * while small, else anti-joined ([[SnapshotTable.readWithDeletes]]). Pushed
     * filters stats-prune the file list and (when exactly translatable)
     * re-apply inside the relation for parquet row-group pushdown, but are
     * all reported residual so Spark's own evaluation above stays

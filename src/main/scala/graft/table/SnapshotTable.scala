@@ -452,10 +452,19 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * Equality-delete applicability is a PER-FILE fact (addedAt vs the
     * delete's commit version, [[SnapshotTable.eqDeleteApplies]]), so the
     * file list splits into strata of equal applicable-delete signature
-    * and each stratum anti-joins on KEYS ONLY — no per-row sequence
+    * and each stratum removes rows on KEYS ONLY — no per-row sequence
     * lookup in the plan, and no reader path ever compared with a manifest
     * path. Signatures are prefix-monotone in addedAt, so there are at
-    * most (eqDels + 1) strata, and compaction folds the ledger anyway. */
+    * most (eqDels + 1) strata, and compaction folds the ledger anyway.
+    *
+    * A small ledger ([[SnapshotTable.literalLedger]]: manifest row counts
+    * alone, no IO) — the steady state between compactions — is read on
+    * the driver and applied as literal row predicates: NOT
+    * (__gd_file, __gd_pos) ∈ entries, NOT key-tuple ∈ entries, each a
+    * sorted set ([[SnapshotTable.notIn]]), the position test behind a hash
+    * test on the position alone. Such a read builds no
+    * broadcast relation and starts no job beyond the scan itself. A larger
+    * ledger anti-joins ([[applyDeletes]], [[eqKeyJoin]]). */
   private[table] def readWithDeletes(files: Seq[SnapshotTable.DataFile],
       schema: org.apache.spark.sql.types.StructType,
       renames: Seq[SnapshotTable.Rename],
@@ -465,17 +474,39 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     if (dels.isEmpty && eqDels.isEmpty)
       readFileList(files, schema, renames, withRowMeta)
     else {
+      import org.apache.spark.sql.functions.col
       val keep = schema.fieldNames.toSeq ++
         (if (withRowMeta) Seq(SnapshotTable.MetaFile, SnapshotTable.MetaPos)
          else Seq.empty)
+      val literal = SnapshotTable.literalLedger(dels, eqDels)
+      // each ledger file is read once, whatever the number of strata
+      lazy val posGone = {
+        val entries = SnapshotTable.driverParquetRows(spark,
+          dels.map(_.path), SnapshotTable.deleteEntrySchema)
+        // a hash test on the position alone spares most rows the struct
+        // test, which builds a struct per row and compares long paths
+        !col(SnapshotTable.MetaPos).isInCollection(entries.map(_.getLong(1)).distinct) ||
+          SnapshotTable.notIn(Seq(SnapshotTable.MetaFile, SnapshotTable.MetaPos),
+            entries)
+      }
+      val eqGone = scala.collection.mutable.Map
+        .empty[SnapshotTable.EqDeleteFile, org.apache.spark.sql.Column]
+      def eqPredicate(d: SnapshotTable.EqDeleteFile) = eqGone.getOrElseUpdate(d,
+        SnapshotTable.notIn(d.keyCols, eqDeleteEntries(d, schema)))
       val strata = files.groupBy(f =>
         eqDels.map(SnapshotTable.eqDeleteApplies(_, f)).toIndexedSeq)
       strata.toSeq.sortBy(_._1.mkString).map { case (sig, fs) =>
-        var df = readFileList(fs, schema, renames,
+        val applicable = eqDels.zip(sig).collect { case (d, true) => d }
+        val df = readFileList(fs, schema, renames,
           withRowMeta = withRowMeta || dels.nonEmpty)
-        if (dels.nonEmpty) df = applyDeletes(df, dels, keep)
-        eqDels.zip(sig).collect { case (d, true) => d }
-          .foldLeft(df) { (acc, d) =>
+        if (literal) {
+          val gone = (if (dels.nonEmpty) Seq(posGone) else Seq.empty) ++
+            applicable.map(eqPredicate)
+          gone.reduceOption(_ && _).fold(df)(df.filter)
+            .select(keep.map(col): _*)
+        } else
+          applicable.foldLeft(
+            if (dels.nonEmpty) applyDeletes(df, dels, keep) else df) { (acc, d) =>
             val (e, cond) = eqKeyJoin(acc, d)
             acc.join(e, cond, "left_anti")
           }
@@ -489,11 +520,11 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
 
   /** Anti-join `base` (which carries the [[SnapshotTable.MetaFile]] /
     * [[SnapshotTable.MetaPos]] provenance columns) against the position-
-    * delete entries, keeping only `keep` columns. The delete payload is
-    * broadcast while provably small (the steady state between
-    * compactions — sizes come from the manifest, no IO); a large backlog
-    * degrades to an ordinary shuffled anti-join rather than OOMing the
-    * driver. */
+    * delete entries, keeping only `keep` columns — the path of a ledger
+    * too large to apply as literals ([[readWithDeletes]]). The entries
+    * are broadcast while the manifest says they fit (32 MB, no IO); a
+    * larger backlog degrades to an ordinary shuffled anti-join rather
+    * than OOMing the driver. */
   private def applyDeletes(base: DataFrame,
       dels: Seq[SnapshotTable.DeleteFile], keep: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col}
@@ -533,8 +564,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       .map(_.dropDuplicates(SnapshotTable.MetaFile, SnapshotTable.MetaPos))
 
   /** One equality-delete file as a KEY-ONLY join side: (entries frame
-    * with prefixed column names, null-safe key match). The entry payload
-    * is broadcast while provably small (manifest bytes). */
+    * with prefixed column names, null-safe key match) — for a ledger too
+    * large to apply as literals ([[readWithDeletes]]) and for the
+    * changelog's [[eqMatchRows]]. The entry payload is broadcast while
+    * the manifest says it fits (32 MB, no IO). */
   private def eqKeyJoin(df: DataFrame, d: SnapshotTable.EqDeleteFile)
       : (DataFrame, org.apache.spark.sql.Column) = {
     import org.apache.spark.sql.functions.broadcast
@@ -551,6 +584,26 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * a Spark job just to infer it. */
   private def eqDeleteRows(d: SnapshotTable.EqDeleteFile): DataFrame =
     spark.read.schema(SnapshotTable.footerSchema(spark, d.path)).parquet(d.path)
+
+  /** The key tuples of one equality-delete file, read on the driver under
+    * its footer schema and carried to `schema`'s declared key types (a
+    * key column widened since the file was written reads wider). */
+  private def eqDeleteEntries(d: SnapshotTable.EqDeleteFile,
+      schema: org.apache.spark.sql.types.StructType)
+      : Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, Literal}
+    val footer = SnapshotTable.footerSchema(spark, d.path)
+    val rows = SnapshotTable.driverParquetRows(spark, Seq(d.path), footer)
+    val from = footer.map(_.dataType)
+    val to = d.keyCols.map(k => schema(k).dataType)
+    if (from == to) rows
+    else {
+      val tz = Option(spark.sessionState.conf.sessionLocalTimeZone)
+      rows.map(r => new GenericInternalRow(from.indices.map { i =>
+        Cast(Literal(r.get(i, from(i)), from(i)), to(i), tz).eval()
+      }.toArray))
+    }
+  }
 
   /** The (file_path, pos) entries of the given delete files. */
   private[table] def deleteEntries(
@@ -779,6 +832,19 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   def renameColumn(oldName: String, newName: String): Int = {
     val base = head
     val schema = base.schema
+    checkRename(base, schema, historicalNames, oldName, newName)
+    val renamed = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
+      if (f.name == oldName) f.copy(name = newName) else f))
+    commitEvolution(renamed.json, Seq(newName -> oldName),
+      validatedAt = base.version)
+  }
+
+  /** The guards of renaming `oldName` in `schema` (the declared schema of
+    * `base`, or an ALTER batch's schema so far), shared by
+    * [[renameColumn]] and the catalog's ALTER TABLE … RENAME COLUMN. */
+  private[table] def checkRename(base: SnapshotTable.Snapshot,
+      schema: org.apache.spark.sql.types.StructType, historical: Set[String],
+      oldName: String, newName: String): Unit = {
     require(schema.fieldNames.contains(oldName), s"no such column: $oldName")
     require(!schema.fieldNames.contains(newName),
       s"column $newName already exists")
@@ -790,13 +856,9 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     require(!base.eqDeleteFiles.exists(_.keyCols.contains(oldName)),
       s"cannot rename $oldName: live equality-delete files key on it — " +
         "run CALL system.compact to fold them first")
-    require(!historicalNames.contains(newName),
+    require(!historical.contains(newName),
       s"cannot rename to $newName: a previous schema generation used that " +
         "name and old data files may still store it — pick a fresh name")
-    val renamed = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
-      if (f.name == oldName) f.copy(name = newName) else f))
-    commitEvolution(renamed.json, Seq(newName -> oldName),
-      validatedAt = base.version)
   }
 
   /** ALTER TABLE … DROP COLUMN — metadata-only: the column leaves the
@@ -807,6 +869,16 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   def dropColumn(name: String): Int = {
     val base = head
     val schema = base.schema
+    checkDrop(base, schema, name)
+    val narrowed = org.apache.spark.sql.types.StructType(
+      schema.fields.filterNot(_.name == name))
+    commitEvolution(narrowed.json, Seq.empty, validatedAt = base.version)
+  }
+
+  /** The guards of dropping `name` from `schema` (as in [[checkRename]]),
+    * shared by [[dropColumn]] and the catalog's ALTER TABLE … DROP COLUMN. */
+  private[table] def checkDrop(base: SnapshotTable.Snapshot,
+      schema: org.apache.spark.sql.types.StructType, name: String): Unit = {
     require(schema.fieldNames.contains(name), s"no such column: $name")
     val psrc = base.partitionCols.map(PartitionFields.parse).map(_.source)
     require(!psrc.contains(name), s"cannot drop partition source column $name")
@@ -814,9 +886,6 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
       s"cannot drop $name: live equality-delete files key on it — " +
         "run CALL system.compact to fold them first")
     require(schema.fields.length > 1, "cannot drop the last column")
-    val narrowed = org.apache.spark.sql.types.StructType(
-      schema.fields.filterNot(_.name == name))
-    commitEvolution(narrowed.json, Seq.empty, validatedAt = base.version)
   }
 
   /** ALTER TABLE … ALTER COLUMN … TYPE — WIDENING only, metadata-only
@@ -956,8 +1025,27 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val orphans = orphans0
       .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
       .map(_.toString)
-    orphans.foreach(p => Files.deleteIfExists(Paths.get(p)))
+    deleteDataFiles(orphans)
     orphans
+  }
+
+  /** Delete data or delete files together with their checksum sidecars,
+    * then each one's own per-stage directory under `data/` once no parquet
+    * file is left in it ([[SnapshotTable.StageDir]]). Shared `__gp_*`
+    * partition directories are never removed: a concurrent writer may be
+    * moving a file into one. */
+  private def deleteDataFiles(paths: Iterable[String]): Unit = {
+    val dirs = paths.map { s =>
+      val p = Paths.get(s)
+      Files.deleteIfExists(p)
+      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+      p.getParent
+    }.toSet
+    dirs.filter(d => d != null && Files.isDirectory(d) &&
+        SnapshotTable.StageDir.matches(d.getFileName.toString) &&
+        scala.util.Using.resource(Files.list(d))(_.iterator().asScala
+          .forall(!_.getFileName.toString.endsWith(".parquet"))))
+      .foreach(d => graft.Tables.deleteRecursively(d.toString))
   }
 
   /** Roll the table back to `version` by committing a NEW snapshot that
@@ -1511,7 +1599,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * of every row where `cond` is TRUE into a position-delete file and
     * commit it — no data file is rewritten, so a 1-row GDPR delete on a
     * 256 MB file costs O(matching rows) IO, not 256 MB. Readers apply
-    * the ledger as a broadcast anti-join; [[compact]] folds it in.
+    * the ledger ([[readWithDeletes]]: literal row predicates while it is
+    * small, else an anti-join); [[compact]] folds it in.
     *
     * Candidate files are manifest-stats pruned by the predicate first
     * (only possibly-matching files are even scanned), and rows already
@@ -1575,13 +1664,15 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * commit — the base table is NEVER read or scanned, so a delete-by-key
     * on a 100 TB table costs O(keys), not even the position-delete's
     * O(matching files) probe scan. Every merge-on-read surface (reads,
-    * the position-delete and merge probes, the changelog) applies the
-    * entry as a null-safe key anti-join over the stratum of files added
-    * before this commit ([[readWithDeletes]]); [[compact]] folds it in.
+    * the position-delete and merge probes, the changelog) removes the
+    * entries' keys, null-safe, from the stratum of files added before
+    * this commit — as a literal row predicate while the ledger is small,
+    * else an anti-join ([[readWithDeletes]]); [[compact]] folds it in.
     *
     * `keys`' columns name the key (any subset of the table's columns);
     * values are cast to the declared column types so write-side and
-    * read-side comparisons can never disagree on type. Returns the
+    * read-side comparisons can never disagree on type. Keys the driver
+    * already holds are staged with no Spark job. Returns the
     * distinct key-tuple count (the rows deleted are unknowable without
     * the scan this operation exists to avoid — Iceberg's contract too). */
   def equalityDelete(keys: DataFrame): Long = {
@@ -1712,7 +1803,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
 
   /** Write the DISTINCT key tuples of `keys` (cast to the declared column
     * types) as one sorted parquet equality-delete file under `data/`;
-    * `atVersion` is left unstamped for the commit to stamp. */
+    * `atVersion` is left unstamped for the commit to stamp. Keys the driver
+    * already holds ([[SnapshotTable.driverRows]]) are cast, de-duplicated
+    * and sorted (Spark's natural ordering) right here and written through
+    * [[ParquetOutput]] — no Spark job; other frames run the job. */
   private def stageEqDeleteEntries(keys: DataFrame,
       base: SnapshotTable.Snapshot): Seq[SnapshotTable.EqDeleteFile] = {
     import org.apache.spark.sql.functions.col
@@ -1736,10 +1830,26 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
             lit(s"' is not castable to ${f.dataType.sql}"))).cast(f.dataType))
         .otherwise(cast).as(f.name)
     }
-    val dir = dataDir.resolve(s"eqdeletes-${java.util.UUID.randomUUID}")
-    keys.select(typed: _*).distinct()
-      .coalesce(1).sortWithinPartitions(keyCols.map(col): _*)
-      .write.parquet(dir.toString)
+    val typedKeys = keys.select(typed: _*)
+    val uuid = java.util.UUID.randomUUID.toString
+    val dir = dataDir.resolve(s"eqdeletes-$uuid")
+    SnapshotTable.driverRows(typedKeys) match {
+      case Some(rows) =>
+        // evaluating the projection on the driver ran the cast guard
+        val ord = org.apache.spark.sql.catalyst.expressions.RowOrdering
+          .createNaturalAscendingOrdering(typedKeys.schema.map(_.dataType))
+        val sorted = rows.sortWith(ord.lt)
+        val distinct = sorted.indices
+          .filter(i => i == 0 || ord.compare(sorted(i - 1), sorted(i)) != 0)
+          .map(sorted)
+        Files.createDirectories(dir)
+        ParquetOutput(spark, typedKeys.schema).writeFile(
+          dir.resolve(s"part-00000-$uuid.parquet").toString, distinct.iterator)
+      case None =>
+        typedKeys.distinct()
+          .coalesce(1).sortWithinPartitions(keyCols.map(col): _*)
+          .write.parquet(dir.toString)
+    }
     val paths = parquetFilesIn(dir).map(_.toString)
     if (paths.isEmpty) { graft.Tables.deleteRecursively(dir.toString); return Seq.empty }
     val footer = footerStatsOf(paths, Seq.empty)
@@ -1791,21 +1901,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
   def setProperties(set: Map[String, String],
       unset: Set[String] = Set.empty): Int = {
     requireMain("ALTER TBLPROPERTIES")
-    set.get(SnapshotTable.MinSnapshotsToKeep).foreach(v =>
-      require(v.trim.matches("\\d+") && v.trim.toInt >= 1,
-        s"${SnapshotTable.MinSnapshotsToKeep} must be a positive integer, got '$v'"))
-    set.get(SnapshotTable.MaxSnapshotAgeMs).foreach(v =>
-      require(v.trim.matches("\\d+"),
-        s"${SnapshotTable.MaxSnapshotAgeMs} must be a non-negative integer, got '$v'"))
-    set.get(SnapshotTable.MaxEqDeleteFiles).foreach(v =>
-      require(v.trim.matches("\\d+") && v.trim.toInt >= 1,
-        s"${SnapshotTable.MaxEqDeleteFiles} must be a positive integer, got '$v'"))
-    set.get(SnapshotTable.SortOrder).foreach { v =>
-      val declared = head.schema.fieldNames
-      v.split(",").map(_.trim).filter(_.nonEmpty).foreach(c =>
-        require(declared.exists(_.equalsIgnoreCase(c)),
-          s"${SnapshotTable.SortOrder}: unknown column $c"))
-    }
+    SnapshotTable.checkProperties(set, head.schema)
     commit("alter")(b => b.copy(properties = (b.properties ++ set) -- unset))
   }
 
@@ -1861,7 +1957,7 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val live = (keep.map(snapshot) ++ branchSnaps)
       .flatMap(SnapshotTable.referencedPaths).toSet
     val dead = drop.map(snapshot).flatMap(SnapshotTable.referencedPaths).toSet -- live
-    dead.foreach(p => Files.deleteIfExists(Paths.get(p)))
+    deleteDataFiles(dead)
     drop.foreach(log.drop)
     // manifest-chunk sweep: chunks referenced by NO surviving snapshot
     // (main or branch) and older than an hour are garbage — expired
@@ -2454,6 +2550,88 @@ object SnapshotTable {
     * was added before the delete's commit (or predates addedAt stamps). */
   private[table] def eqDeleteApplies(d: EqDeleteFile, f: DataFile): Boolean =
     f.addedAt < 0 || f.addedAt < d.atVersion
+
+  /** Validate table properties being set against the declared `schema`,
+    * so a typo'd policy fails at ALTER time, not silently at the next
+    * expiration or commit — shared by [[SnapshotTable.setProperties]] and
+    * the catalog's ALTER TABLE … SET TBLPROPERTIES. */
+  private[table] def checkProperties(set: Map[String, String],
+      schema: org.apache.spark.sql.types.StructType): Unit = {
+    set.get(MinSnapshotsToKeep).foreach(v =>
+      require(v.trim.matches("\\d+") && v.trim.toInt >= 1,
+        s"$MinSnapshotsToKeep must be a positive integer, got '$v'"))
+    set.get(MaxSnapshotAgeMs).foreach(v =>
+      require(v.trim.matches("\\d+"),
+        s"$MaxSnapshotAgeMs must be a non-negative integer, got '$v'"))
+    set.get(MaxEqDeleteFiles).foreach(v =>
+      require(v.trim.matches("\\d+") && v.trim.toInt >= 1,
+        s"$MaxEqDeleteFiles must be a positive integer, got '$v'"))
+    set.get(SortOrder).foreach(v =>
+      v.split(",").map(_.trim).filter(_.nonEmpty).foreach(c =>
+        require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
+          s"$SortOrder: unknown column $c")))
+  }
+
+  /** The name of a directory one stage owns under `data/`: `<uuid>/`,
+    * `deletes-<uuid>/`, `eqdeletes-<uuid>/` or add_files' `added-<id>/`. */
+  private[table] val StageDir =
+    "(?:(?:eq)?deletes-)?[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}|added-[0-9a-f]{8}".r
+
+  /** The most delete entries (position plus equality, manifest `rows`) a
+    * read applies as literal row predicates ([[literalLedger]]). The bound
+    * is set by plan size, not scan cost: Spark renders every `InSet`
+    * element into each query's plan description, about 190 characters
+    * per position entry and once per stratum. 100 entries keep that near
+    * 20 KB; the steady state between compactions holds a few to tens. */
+  private[table] val LiteralLedgerMax = 100L
+
+  /** True when a read applies the ledger `dels` + `eqDels` as literal row
+    * predicates on the driver-read entries rather than anti-joining: every
+    * file's manifest row count is known and they sum to at most
+    * [[LiteralLedgerMax]]. Manifest facts only — no IO. */
+  private[table] def literalLedger(dels: Seq[DeleteFile],
+      eqDels: Seq[EqDeleteFile]): Boolean = {
+    val rows = dels.map(_.rows) ++ eqDels.map(_.rows)
+    rows.forall(_ >= 0) && rows.sum <= LiteralLedgerMax
+  }
+
+  /** The row predicate NOT (`key` ∈ `entries`), with the null-safe match of
+    * the `<=>` anti-join it replaces. The key is tested as a struct against
+    * `InSet`'s sorted set under Spark's ordering, where a NULL component
+    * equals a NULL component (a NULL entry kills NULL-keyed rows, a NULL
+    * key survives every non-NULL entry) and 0.0 equals -0.0 and NaN equals
+    * NaN, as the join's key normalization has them. */
+  private[table] def notIn(key: Seq[String],
+      entries: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{CreateStruct, InSet, Not}
+    org.apache.spark.sql.ExpressionColumn(Not(InSet(
+      CreateStruct(key.map(UnresolvedAttribute.quoted)), entries.toSet[Any])))
+  }
+
+  /** The rows of small parquet files under `schema`, read on the driver
+    * through Spark's own `ParquetFileFormat` reader — the read-side twin of
+    * [[ParquetOutput]]: the session's parquet settings apply, and no
+    * Spark job starts. */
+  private[table] def driverParquetRows(spark: SparkSession, paths: Seq[String],
+      schema: org.apache.spark.sql.types.StructType)
+      : Seq[org.apache.spark.sql.catalyst.InternalRow] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val conf = spark.sessionState.newHadoopConf()
+    val read = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
+      .buildReaderWithPartitionValues(spark, schema,
+        org.apache.spark.sql.types.StructType(Nil), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    paths.flatMap { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      val len = path.getFileSystem(conf).getFileStatus(path).getLen
+      read(PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(path), 0L, len,
+        Array.empty[String], 0L, len, Map.empty[String, Any]))
+        .map(_.copy()).toVector
+    }
+  }
 
   /** Every file snapshot `s` references: data and both delete flavors. */
   private[table] def referencedPaths(s: Snapshot): Seq[String] =

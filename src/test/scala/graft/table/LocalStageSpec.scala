@@ -1,13 +1,10 @@
 package graft.table
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import graft.SparkFunSuite
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -33,21 +30,6 @@ class LocalStageSpec extends SparkFunSuite {
 
   private def frame(from: Int, n: Int): DataFrame =
     spark.createDataFrame(rows(from, n).asJava, schema)
-
-  /** Run `body`, returning its result and the Spark jobs it started. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    ListenerBusAccess.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      ListenerBusAccess.drain(spark.sparkContext)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
 
   /** The files the latest commit added. */
   private def added(t: SnapshotTable): Seq[SnapshotTable.DataFile] = {

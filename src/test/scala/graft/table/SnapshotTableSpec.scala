@@ -67,6 +67,39 @@ class SnapshotTableSpec extends SparkFunSuite {
     assert(t.read().count() == 100)
   }
 
+  test("expiration and orphan removal leave no checksum sidecar or emptied stage directory") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val loc = scratch("snap-expire-sidecars")
+    val t = SnapshotTable.create(spark, loc, events.limit(100).repartition(2))
+    t.append(events.limit(10))                             // driver-written
+    t.positionDelete(col("event_id") < 5)
+    t.equalityDelete(Seq(7L).toDF("user_id"))
+    t.compact()
+    val live = t.read().collect().map(_.toString).sorted.toSeq
+    t.expireSnapshots(keepLast = 1)
+    // a crashed writer's staged directory: older than the grace window
+    val crashed = Paths.get(loc, "data", java.util.UUID.randomUUID.toString)
+    events.limit(3).coalesce(1).write.parquet(crashed.toString)
+    Files.walk(crashed).iterator().asScala.toList
+      .foreach(p => Files.setLastModifiedTime(p,
+        java.nio.file.attribute.FileTime.fromMillis(0L)))
+    assert(t.removeOrphans().nonEmpty)
+    def under(p: Path): List[Path] =
+      scala.util.Using.resource(Files.walk(p))(_.iterator().asScala.toList)
+    val all = under(Paths.get(loc, "data"))
+    val parquet = all.filter(_.getFileName.toString.endsWith(".parquet")).toSet
+    assert(parquet.map(_.toString) == t.snapshot(t.latestVersion).files.map(_.path).toSet)
+    val sidecars = all.filter(_.getFileName.toString.endsWith(".parquet.crc"))
+    assert(sidecars.forall(c => parquet.contains(
+      c.resolveSibling(c.getFileName.toString.stripPrefix(".").stripSuffix(".crc")))),
+      s"orphaned sidecars: $sidecars")
+    val dirs = all.filter(Files.isDirectory(_)).filterNot(_ == Paths.get(loc, "data"))
+    assert(dirs.forall(d => under(d).exists(parquet.contains)),
+      s"directories with no parquet file: $dirs")
+    assert(t.read().collect().map(_.toString).sorted.toSeq == live)
+  }
+
   test("a concurrently moved base aborts an ALTER instead of clobbering it") {
     import org.apache.spark.sql.types._
     val loc = scratch("snap-conc-alter")

@@ -43,6 +43,35 @@ class TableEvolutionSpec extends SparkFunSuite {
       .columns.toSeq == Seq("id", "label"))
   }
 
+  test("SQL ALTER keeps the API's guards: equality-delete key columns and property validation") {
+    wh
+    spark.sql("DROP TABLE IF EXISTS ev.db.eqkeyed")
+    spark.sql("CREATE TABLE ev.db.eqkeyed (id BIGINT, label STRING)")
+    spark.sql("INSERT INTO ev.db.eqkeyed VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    val t = SnapshotTable.load(spark, s"$wh/db/eqkeyed")
+    t.equalityDelete(Seq(2L).toDF("id"))
+    val version = t.latestVersion
+    def refused(sql: String, msg: String): Unit = {
+      def msgs(x: Throwable): Seq[String] =
+        if (x == null) Seq.empty else Option(x.getMessage).toSeq ++ msgs(x.getCause)
+      val ex = intercept[Exception](spark.sql(sql))
+      assert(msgs(ex).exists(_.contains(msg)), msgs(ex))
+    }
+    refused("ALTER TABLE ev.db.eqkeyed RENAME COLUMN id TO key",
+      "live equality-delete files key on it")
+    refused("ALTER TABLE ev.db.eqkeyed DROP COLUMN id",
+      "live equality-delete files key on it")
+    refused("ALTER TABLE ev.db.eqkeyed SET TBLPROPERTIES " +
+      s"('${SnapshotTable.MaxEqDeleteFiles}' = 'zero')", "must be a positive integer")
+    assert(t.latestVersion == version)
+    assert(spark.sql("SELECT id FROM ev.db.eqkeyed").as[Long].collect().sorted
+      .toSeq == Seq(1L, 3L))
+    // a column no delete keys on still renames
+    spark.sql("ALTER TABLE ev.db.eqkeyed RENAME COLUMN label TO tag")
+    assert(spark.sql("SELECT tag FROM ev.db.eqkeyed ORDER BY id").as[String]
+      .collect().toSeq == Seq("a", "c"))
+  }
+
   test("ALTER TABLE RENAME COLUMN: metadata-only, old files readable, compact normalizes") {
     wh
     spark.sql("DROP TABLE IF EXISTS ev.db.renamed")
