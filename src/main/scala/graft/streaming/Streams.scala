@@ -575,8 +575,10 @@ object Streams {
 
   /** Streaming ingest INTO a snapshot table (the reference's
     * Firehose→Iceberg landing path with ACID semantics): each micro-batch
-    * commits one snapshot tagged with its batch id. Replayed batches after
-    * a checkpoint-recovery restart are detected by the tag and skipped, so
+    * commits one snapshot that also sets the stream's last-batch marker
+    * ([[graft.table.SnapshotTable.streamProgress]], keyed by the checkpoint
+    * name `ingest_<checkpointTag>`). A batch replayed after a restart is at
+    * or below the marker and skipped, after compaction and expiry too, so
     * the sink is exactly-once end-to-end (file-source offsets in the
     * checkpoint + idempotent commit on the table side).
     */
@@ -592,19 +594,21 @@ object Streams {
     SparkSession.setActiveSession(s2)
     try {
       val schema = s2.read.parquet(srcDir).schema
-      val ckpt = Tables.scratch(s"ckpt/ingest_$checkpointTag")
+      val stream = s"ingest_$checkpointTag"
+      val ckpt = Tables.scratch(s"ckpt/$stream")
       val q = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", 10).parquet(srcDir)
         .writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val tag = s"stream-batch-$batchId"
-          // the first batch creates the table, then commits the tagged
-          // snapshot like every later one
+          // the first batch creates the table, then commits like every
+          // later one
           val t = SnapshotTable.find(batch.sparkSession, tableLoc).getOrElse(
             SnapshotTable.createEmpty(batch.sparkSession, tableLoc, batch.schema))
-          if (!t.hasOperation(tag)) t.append(batch, tag)
+          if (batchId > t.committedBatch(stream))
+            t.append(batch, s"stream-batch-$batchId",
+              setProps = SnapshotTable.streamProgress(stream, batchId))
           ()
         }
         .start()
@@ -624,8 +628,8 @@ object Streams {
     * [[graft.table.SnapshotTable.upsertMor]], O(batch) IO with the base
     * table never read, the property that keeps a continuous upsert
     * stream feasible against a 100 TB table. Exactly-once like
-    * [[streamIntoTable]]: batch-id-tagged commits, replays detected and
-    * skipped. Readers pay the MOR anti-join until `CALL system.compact`
+    * [[streamIntoTable]], the marker keyed `upsert_<checkpointTag>`.
+    * Readers pay the MOR anti-join until `CALL system.compact`
     * folds the ledger (the documented maintenance contract).
     */
   def upsertStream(spark: SparkSession, srcDir: String, tableLoc: String,
@@ -638,18 +642,14 @@ object Streams {
     SparkSession.setActiveSession(s2)
     try {
       val schema = s2.read.parquet(srcDir).schema
-      val ckpt = Tables.scratch(s"ckpt/upsert_$checkpointTag")
+      val stream = s"upsert_$checkpointTag"
+      val ckpt = Tables.scratch(s"ckpt/$stream")
       val q = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(srcDir)
         .writeStream
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow())
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // scope the exactly-once replay tag to THIS logical stream: a
-          // second stream into the same table (fresh checkpoint, batch
-          // ids restarting at 0) must not have its early batches skipped
-          // as replays of the first stream's commits
-          val tag = s"upsert-$checkpointTag-batch-$batchId"
           val t = SnapshotTable.find(batch.sparkSession, tableLoc).getOrElse(
             SnapshotTable.createEmpty(batch.sparkSession, tableLoc, batch.schema))
           // within-batch key dedup: an upsert's equality delete never
@@ -657,8 +657,10 @@ object Streams {
           // would BOTH land — keep one per key (Flink's upsert sink keeps
           // the checkpoint's last row the same way; with no ordering
           // column the survivor is arbitrary but the key is unique)
-          if (!t.hasOperation(tag))
-            t.upsertMor(batch.dropDuplicates(keyCols), keyCols, tag)
+          if (batchId > t.committedBatch(stream))
+            t.upsertMor(batch.dropDuplicates(keyCols), keyCols,
+              s"upsert-$checkpointTag-batch-$batchId",
+              setProps = SnapshotTable.streamProgress(stream, batchId))
           ()
         }
         .start()

@@ -36,8 +36,10 @@ private[table] final class SnapshotLog private (dir: Path) {
     new java.util.concurrent.ConcurrentHashMap[Int, SnapshotTable.Snapshot]()
 
   def read(version: Int): SnapshotTable.Snapshot =
-    parsed.computeIfAbsent(version, v =>
-      SnapshotTable.parseSnapshot(Files.readString(file(v))))
+    parsed.computeIfAbsent(version, { v =>
+      SnapshotLog.parses.increment()
+      SnapshotTable.parseSnapshot(Files.readString(file(v)))
+    })
 
   /** The commit point: publish `doc` as `version` iff that version is
     * still free ([[CommitPrimitive]]). */
@@ -63,9 +65,10 @@ private[table] object SnapshotLog {
     case _ => None
   }
 
-  /** Directory listings made here: how specs bound one operation's
-    * metadata IO. */
+  /** Directory listings and version documents parsed here: how specs
+    * bound one operation's metadata IO. */
   private[table] val listings = new java.util.concurrent.atomic.LongAdder()
+  private[table] val parses = new java.util.concurrent.atomic.LongAdder()
 
   // Using.resource: `Files.list` holds a directory handle until closed,
   // and leaked handles took the test JVM to EMFILE

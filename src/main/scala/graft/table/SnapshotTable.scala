@@ -937,11 +937,10 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * always rebase cleanly over concurrent commits). The committed schema
     * is the union of the table schema and the appended frame's schema —
     * additive evolution, old rows read null for new columns.
-    * `operation` tags the snapshot (streaming sinks use it to record the
-    * micro-batch id for exactly-once replay detection). `setProps` merges
-    * table properties INTO the same commit — callers that would otherwise
-    * follow the append with setProperties (the CDC dynamic table's
-    * watermark) save a whole snapshot commit per refresh. */
+    * `operation` labels the snapshot. `setProps` merges table properties
+    * INTO the same commit — a streaming sink's progress marker
+    * ([[SnapshotTable.streamProgress]]) and the CDC dynamic table's
+    * watermark land atomically with their rows, with no second commit. */
   def append(df: DataFrame, operation: String = "append",
       partitionColsIfNew: Seq[String] = Seq.empty,
       setProps: Map[String, String] = Map.empty): Int = {
@@ -1694,9 +1693,11 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * and survive its delete by the sequence rule — so the whole upsert is
     * O(batch) IO with the base table untouched, the property that makes a
     * continuous 100 TB upsert stream feasible where [[mergeMor]]'s
-    * key-probe scan or [[upsert]]'s full rewrite would not be. */
+    * key-probe scan or [[upsert]]'s full rewrite would not be.
+    * `setProps` rides the same commit, as in [[append]]. */
   def upsertMor(updates: DataFrame, keyCols: Seq[String],
-      operation: String = "merge"): Int = {
+      operation: String = "merge",
+      setProps: Map[String, String] = Map.empty): Int = {
     import org.apache.spark.sql.functions.col
     require(keyCols.nonEmpty, "upsertMor needs at least one key column")
     keyCols.foreach(k => require(updates.columns.exists(_.equalsIgnoreCase(k)),
@@ -1709,7 +1710,8 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     val stagedData = stage(updates, base, base.partitionCols)
     val v = commit(operation)(b => b.copy(files = b.files ++ stagedData,
       schemaJson = SnapshotTable.unionSchema(b, updates.schema),
-      eqDeleteFiles = b.eqDeleteFiles ++ stagedDeletes))
+      eqDeleteFiles = b.eqDeleteFiles ++ stagedDeletes,
+      properties = b.properties ++ setProps))
     maybeAutoFold(v)
     v
   }
@@ -1892,6 +1894,14 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
 
   /** Current table properties (carried forward by every commit). */
   def properties: Map[String, String] = head.properties
+
+  /** The last batch `stream` committed into this table, -1 if none: a
+    * streaming sink commits batch N only when N is past it, and sets it
+    * in that same commit ([[SnapshotTable.streamProgress]]). One head
+    * read at any history length. */
+  def committedBatch(stream: String): Long =
+    properties.get(SnapshotTable.streamBatchKey(stream))
+      .map(_.trim.toLong).getOrElse(-1L)
 
   /** ALTER TABLE … SET/UNSET TBLPROPERTIES: one metadata-only commit
     * merging `set` and dropping `unset`. Retention floors
@@ -2315,19 +2325,17 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     }
   }
 
-  /** True if any snapshot was committed with `operation` — the one replay
-    * check behind exactly-once streaming epochs. */
-  def hasOperation(operation: String): Boolean =
-    versions.exists(v => snapshot(v).operation == operation)
-
   /** Append parquet files an EXTERNAL writer staged (the DSv2 streaming
     * epoch write): rename them into `data/`, collect footer stats, commit
-    * as an append tagged `operation`. Schema union like [[append]]. */
+    * as an append tagged `operation`. Schema union and `setProps` like
+    * [[append]]. */
   private[table] def appendStagedFiles(stagedPaths: Seq[java.nio.file.Path],
-      schema: org.apache.spark.sql.types.StructType, operation: String): Int =
+      schema: org.apache.spark.sql.types.StructType, operation: String,
+      setProps: Map[String, String] = Map.empty): Int =
     commitStaged(stagedPaths, schema, operation)((b, files) =>
       b.copy(files = b.files ++ files,
-        schemaJson = SnapshotTable.unionSchema(b, schema)))
+        schemaJson = SnapshotTable.unionSchema(b, schema),
+        properties = b.properties ++ setProps))
 
   /** Replace the table's ENTIRE content with parquet files an external
     * writer staged (the DSv2 streaming COMPLETE-mode epoch write: each
@@ -2336,9 +2344,11 @@ final class SnapshotTable private (val spark: SparkSession, val location: String
     * + footer-stats path as [[appendStagedFiles]]; an empty staged set is
     * a legitimate complete-mode result and commits an empty snapshot. */
   private[table] def replaceStagedFiles(stagedPaths: Seq[java.nio.file.Path],
-      schema: org.apache.spark.sql.types.StructType, operation: String): Int =
+      schema: org.apache.spark.sql.types.StructType, operation: String,
+      setProps: Map[String, String] = Map.empty): Int =
     commitStaged(stagedPaths, schema, operation)((b, files) =>
-      b.copy(files = files, schemaJson = schema.json, deleteFiles = Seq.empty))
+      b.copy(files = files, schemaJson = schema.json, deleteFiles = Seq.empty,
+        properties = b.properties ++ setProps))
 
   /** The body both staged-file commits share: rename the external
     * writer's files into `data/`, collect their footer stats, and commit
@@ -2723,6 +2733,16 @@ object SnapshotTable {
   val MaxEqDeleteFiles = "write.delete.max-eq-files"
   /** Max file entries per manifest chunk (bounds chunk parse cost). */
   val ChunkEntries = 8192
+
+  /** The progress marker a streaming sink commits with batch `batch` of
+    * `stream`, read back by [[SnapshotTable.committedBatch]]. Written by
+    * commits only, never a setting: every edit is `b.copy(...)`, so the
+    * marker rides append, compaction, overwrite, expiry and rollback. */
+  def streamProgress(stream: String, batch: Long): Map[String, String] =
+    Map(streamBatchKey(stream) -> batch.toString)
+
+  private def streamBatchKey(stream: String): String =
+    s"graft.stream.$stream.last-batch"
 
   /** Publish attempts before a commit gives up ([[SnapshotTable.commit]]). */
   private val CommitAttempts = 20

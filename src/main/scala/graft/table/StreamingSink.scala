@@ -12,13 +12,16 @@ import org.apache.spark.sql.types.StructType
   * Each epoch's writers stream rows through Spark's own parquet
   * `OutputWriterFactory` (same codec/conf path as batch writes) into a
   * per-epoch staging directory; the epoch commit renames the files into
-  * `data/` and appends them as one snapshot tagged
-  * `stream-<queryId>-epoch-<N>`. Idempotence: a restarted query replaying
-  * epoch N skips the commit if either the tagged snapshot still exists or
-  * the per-query high-water epoch in `_sink-state/` (durable across
-  * snapshot expiry) already covers N — rows land exactly once
+  * `data/` and appends them as one snapshot that also sets the query's
+  * last-batch marker ([[SnapshotTable.streamProgress]], keyed by the
+  * checkpoint-stable `queryId`). A restarted query replaying epoch N
+  * commits only when N is past [[SnapshotTable.committedBatch]]; later
+  * commits carry the marker, so one head read recognizes a replay after
+  * any crash and after snapshot expiry — rows land exactly once
   * (reference T1/S8 — the Firehose→Iceberg ingestion contract,
-  * `aws-community-builders-presentation.md:214-251`).
+  * `aws-community-builders-presentation.md:214-251`). A query
+  * checkpointed by a build without the marker has none: its first
+  * replay after the upgrade is not recognized.
   */
 class GraftStreamingWrite(location: String, schema: StructType,
     queryId: String, truncate: Boolean = false) extends StreamingWrite {
@@ -27,51 +30,6 @@ class GraftStreamingWrite(location: String, schema: StructType,
 
   private def stagingDir(epochId: Long): java.nio.file.Path =
     java.nio.file.Paths.get(location, "_staging", s"stream-$queryId-$epochId")
-
-  /** Durable replay marker. The epoch tag in the snapshot log is enough
-    * while the tagged snapshot exists, but expire_snapshots may collect it;
-    * if another commit then lands before a query restart, the replayed
-    * epoch would re-append its batch. The high-water epoch therefore also
-    * persists in a per-query side file under `_sink-state/` that snapshot
-    * expiry never touches. Epochs are committed serially per query, so a
-    * plain REPLACE_EXISTING move of the monotone maximum is race-free. */
-  private def stateFile: java.nio.file.Path =
-    java.nio.file.Paths.get(location, "_sink-state", s"$queryId")
-
-  private def lastCommittedEpoch: Long = {
-    def read(): Long =
-      if (java.nio.file.Files.exists(stateFile))
-        new String(java.nio.file.Files.readAllBytes(stateFile), "UTF-8").trim.toLong
-      else -1L
-    // A corrupt side file (NumberFormatException) falls back to -1: the
-    // snapshot tag alone then proves idempotence, which is safe because
-    // corruption means the marker was never durably meaningful. A
-    // PERSISTENTLY unreadable file is different: the marker may exist and
-    // cover this epoch while the tagged snapshot has been expired, so
-    // falling back to -1 could re-append a replayed batch (duplicate
-    // rows). Retry once for transient IO, then FAIL the commit — Spark
-    // retries the batch and exactly-once is preserved.
-    try read() catch {
-      case _: NumberFormatException => -1L
-      case _: java.io.IOException =>
-        try read() catch {
-          case _: NumberFormatException => -1L
-          case e: java.io.IOException =>
-            throw new IllegalStateException(
-              s"sink state $stateFile unreadable after retry; failing the " +
-                "epoch commit rather than risking a duplicate append", e)
-        }
-    }
-  }
-
-  private def recordEpoch(epochId: Long): Unit = {
-    java.nio.file.Files.createDirectories(stateFile.getParent)
-    val tmp = stateFile.resolveSibling(s"$queryId.tmp")
-    java.nio.file.Files.write(tmp, epochId.toString.getBytes("UTF-8"))
-    java.nio.file.Files.move(tmp, stateFile,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
 
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory = {
@@ -84,7 +42,7 @@ class GraftStreamingWrite(location: String, schema: StructType,
     val t = SnapshotTable.load(spark, location)
     val tag = s"stream-$queryId-epoch-$epochId"
     val dir = stagingDir(epochId)
-    if (epochId > lastCommittedEpoch && !t.hasOperation(tag)) {
+    if (epochId > t.committedBatch(queryId)) {
       val declared = messages.toSeq
         .collect { case m: GraftStreamingWrite.StagedFiles => m.paths }
         .flatten.map(java.nio.file.Paths.get(_))
@@ -100,11 +58,12 @@ class GraftStreamingWrite(location: String, schema: StructType,
             "failing the commit so the batch is re-staged")
       // COMPLETE output mode (builder's truncate()): the epoch carries the
       // full recomputed result, so swap the whole file list — an empty
-      // result is a legitimate complete-mode epoch and still commits
-      if (truncate) t.replaceStagedFiles(staged, schema, tag)
-      else if (staged.nonEmpty) t.appendStagedFiles(staged, schema, tag)
+      // result is a legitimate complete-mode epoch and still commits. An
+      // empty append epoch commits nothing, so there is nothing to replay.
+      val marker = SnapshotTable.streamProgress(queryId, epochId)
+      if (truncate) t.replaceStagedFiles(staged, schema, tag, marker)
+      else if (staged.nonEmpty) t.appendStagedFiles(staged, schema, tag, marker)
     }
-    recordEpoch(math.max(epochId, lastCommittedEpoch))
     graft.Tables.deleteRecursively(dir.toString)
   }
 

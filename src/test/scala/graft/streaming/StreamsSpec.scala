@@ -271,6 +271,46 @@ class StreamsSpec extends SparkFunSuite {
     assert(t3.versions.size == v1.size + 1)
   }
 
+  test("streamIntoTable: a second stream with a fresh checkpoint is not skipped as replay") {
+    val events = graft.Tables.load(spark, sf, "events")
+    val srcA = scratch("ingest-two-srcA")
+    val srcB = scratch("ingest-two-srcB")
+    events.filter(col("event_id") < 300).repartition(2).write.parquet(srcA)
+    events.filter(col("event_id") >= 300).repartition(2).write.parquet(srcB)
+    val loc = scratch("ingest-two-table")
+    Seq("two-a", "two-b").foreach(tag =>
+      graft.Tables.deleteRecursively(graft.Tables.scratch(s"ckpt/ingest_$tag")))
+    Streams.streamIntoTable(spark, srcA, loc, "two-a")
+    // the second stream's batch ids restart at 0, like the first's
+    val t = Streams.streamIntoTable(spark, srcB, loc, "two-b")
+    assert(t.read().count() == events.count())
+  }
+
+  test("streamIntoTable: a batch replayed after its snapshot is expired lands once") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val src = scratch("ingest-expired-src")
+    graft.Tables.load(spark, sf, "events").repartition(3).write.parquet(src)
+    val loc = scratch("ingest-expired-table")
+    val ckpt = graft.Tables.scratch("ckpt/ingest_ingest-expired")
+    graft.Tables.deleteRecursively(ckpt)
+    val t = Streams.streamIntoTable(spark, src, loc, "ingest-expired")
+    val rows = t.read().count()
+    // the crash window: the table commit landed, Spark's commit-log entry
+    // for the batch did not
+    val commits = Paths.get(ckpt, "commits")
+    val last = scala.util.Using.resource(Files.list(commits))(_.iterator()
+      .asScala.map(_.getFileName.toString).flatMap(_.toLongOption).max)
+    Files.delete(commits.resolve(last.toString))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    // no surviving snapshot is labelled with the batch any more
+    t.compact()
+    t.expireSnapshots(1)
+    assert(!t.versions.map(t.snapshot).exists(_.operation.startsWith("stream-batch-")))
+    val replayed = Streams.streamIntoTable(spark, src, loc, "ingest-expired")
+    assert(replayed.read().count() == rows)
+  }
+
   test("streamIntoTable leaves the caller session's confs untouched") {
     val events = graft.Tables.load(spark, sf, "events")
     val src = scratch("ingest-isolation-src")

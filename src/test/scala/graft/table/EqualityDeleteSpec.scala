@@ -183,12 +183,16 @@ class EqualityDeleteSpec extends SparkFunSuite {
     assert(t.read().count() == e.count())
     val dup = t.read().groupBy("event_id").count().filter(col("count") > 1).count()
     assert(dup == 0)
-    // replay detection is scoped to THIS logical stream's tag — a batch id
-    // alone is not an identity (a second stream's batch 0 must not be
-    // mistaken for this one's)
+    // replay detection is scoped to THIS logical stream — a batch id alone
+    // is not an identity (a second stream's batch 0 must not be mistaken
+    // for this one's): the marker names this stream's last committed batch,
+    // and another stream has none
     val v = t.latestVersion
-    assert(t.hasOperation(s"upsert-$ckptTag-batch-0"))
-    assert(!t.hasOperation(s"upsert-$ckptTag-batch-999"))
+    val lastBatch = t.versions.map(t.snapshot(_).operation)
+      .collect { case op if op.startsWith(s"upsert-$ckptTag-batch-") =>
+        op.stripPrefix(s"upsert-$ckptTag-batch-").toLong }.max
+    assert(t.committedBatch(s"upsert_$ckptTag") == lastBatch)
+    assert(t.committedBatch(s"upsert_other_$ckptTag") == -1L)
     assert(t.latestVersion == v)
   }
 

@@ -81,8 +81,8 @@ class StreamingSinkSpec extends SparkFunSuite {
     t.append(spark.range(1).selectExpr("900001 + id AS event_id"))
     t.expireSnapshots(keepLast = 1)
     assert(!t.versions.map(v => t.snapshot(v).operation).exists(_.startsWith("stream-")))
-    // first-delivery replay of epoch 0 must be recognized via the durable
-    // sink-state high-water mark and commit nothing
+    // first-delivery replay of epoch 0 must be recognized via the progress
+    // marker the surviving snapshot carries, and commit nothing
     w.commit(0, Array(stagedMsg(0)))
     assert(t.read().count() == 6)
   }
@@ -102,38 +102,9 @@ class StreamingSinkSpec extends SparkFunSuite {
       w.commit(0, Array(GraftStreamingWrite.StagedFiles(Seq(gone))))
     }
     assert(t.read().count() == 0)
-    // a genuinely empty epoch still advances the high-water mark
+    // an empty append epoch commits nothing: there is nothing to replay
     w.commit(0, Array.empty)
     assert(t.read().count() == 0)
-  }
-
-  test("a persistently unreadable sink-state file fails the commit (no duplicate-append risk)") {
-    import org.apache.spark.sql.types._
-    val loc = scratch("streamsink-io-table")
-    val t = SnapshotTable.create(spark, loc,
-      spark.range(0).selectExpr("id AS event_id"))
-    val schema = StructType(Seq(StructField("event_id", LongType)))
-    val w = new GraftStreamingWrite(loc, schema, "q-io-test")
-    // a directory where the side file should be makes every read attempt
-    // throw IOException — the persistent-failure shape. Falling back to -1
-    // here could re-append a replayed epoch whose tag was expired; the
-    // commit must fail instead so Spark retries the batch.
-    java.nio.file.Files.createDirectories(
-      java.nio.file.Paths.get(loc, "_sink-state", "q-io-test"))
-    intercept[IllegalStateException] { w.commit(0, Array.empty) }
-    assert(t.read().count() == 0)
-
-    // corruption (unparseable content) still falls back to the tag-only
-    // check rather than wedging the stream forever
-    val loc2 = scratch("streamsink-corrupt-table")
-    val t2 = SnapshotTable.create(spark, loc2,
-      spark.range(0).selectExpr("id AS event_id"))
-    val w2 = new GraftStreamingWrite(loc2, schema, "q-corrupt-test")
-    val sf2 = java.nio.file.Paths.get(loc2, "_sink-state", "q-corrupt-test")
-    java.nio.file.Files.createDirectories(sf2.getParent)
-    java.nio.file.Files.write(sf2, "not-a-number".getBytes("UTF-8"))
-    w2.commit(0, Array.empty)
-    assert(t2.read().count() == 0)
   }
 
   test("streaming sink into a PARTITIONED table keeps partition columns queryable") {
